@@ -975,6 +975,28 @@ def q_session_stats_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_stats(ev, "user_id", "ts", gap_seconds=1800)
 
 
+def _await_stream(q, timeout_s: int, what: str) -> None:
+    """Block until the availableNow query ``q`` finishes. A hung stream
+    is stopped and raises, so callers never read a partial sink; the
+    check is an explicit raise, not an ``assert`` that ``python -O``
+    would strip (ADVICE r05)."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise RuntimeError(f"{what} did not complete within {timeout_s}s")
+
+
+def _stamp_appended(directory: str, stamped: list[str], t0: int) -> None:
+    """Give each parquet file new in ``directory`` since the last call an
+    mtime 2 s after the one before it. A file stream source replays files
+    in mtime order, so appends then replay in write order even where the
+    filesystem's mtime resolution would let two writes tie (ADVICE r05)."""
+    for name in sorted(os.listdir(directory)):
+        if name.endswith(".parquet") and name not in stamped:
+            t = t0 + 2 * len(stamped)
+            os.utime(os.path.join(directory, name), (t, t))
+            stamped.append(name)
+
+
 def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
     """Replay the user_id<20 events as file-source micro-batches through
     ``stateful_sessions`` (applyInPandasWithState, event-time timeout —
@@ -987,7 +1009,8 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
     contract), so a randomly-split replay could deliver an interleaved
     run AFTER its session was already emitted. The events are therefore
     split into four CONTIGUOUS time-range files written in ascending
-    order (file-source batches order by mtime): every interior gap's
+    order, each stamped with a strictly later mtime than the one before
+    (file-source batches order by mtime): every interior gap's
     merge window then lies wholly inside its own file, and only the open
     trailing session ever crosses a batch boundary — exactly the
     streaming contract. A sentinel far-future single-row file is written
@@ -997,6 +1020,7 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
     not statistical."""
     import shutil
     import tempfile
+    import time
     import uuid as _uuid
 
     from phphll_spark.operators import sessionize
@@ -1020,6 +1044,8 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
         epoch = ev.select(F.unix_timestamp("ts").cast("double").alias("e"))
         cuts = [int(c) for c in epoch.stat.approxQuantile("e", [0.25, 0.5, 0.75], 0.0)]
         bounds = [None, *cuts, None]
+        stamped: list[str] = []
+        t0 = int(time.time()) - 60
         for i in range(4):
             part = ev
             if bounds[i] is not None:
@@ -1027,6 +1053,7 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
             if bounds[i + 1] is not None:
                 part = part.filter(F.unix_timestamp("ts") <= bounds[i + 1])
             part.coalesce(1).write.mode("append").parquet(src)
+            _stamp_appended(src, stamped, t0)
         # sentinel AFTER the real files: final watermark = sentinel ts
         # (delay 0) > every session end + gap → full state flush
         from datetime import timedelta
@@ -1035,6 +1062,7 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
         spark.createDataFrame([(flush_ts, sentinel_uid)], "ts timestamp, uid string").coalesce(
             1
         ).write.mode("append").parquet(src)
+        _stamp_appended(src, stamped, t0)
         stream = (
             spark.readStream.schema("ts timestamp, uid string")
             .option("maxFilesPerTrigger", "1")
@@ -1050,7 +1078,7 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300), "stateful-sessions replay did not complete within 300s"
+        _await_stream(q, 300, "stateful-sessions replay")
         cols = ["uid", "session_start", "session_end", "n_events"]
         streamed = spark.sql(f"SELECT * FROM {name}").filter(
             F.col("uid") != sentinel_uid
@@ -1126,7 +1154,7 @@ def q_streaming_daily_users_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # a hung stream must fail loudly, not proceed with a partial
         # snapshot into a confusing stream_eq_batch=false (ADVICE r04)
-        assert q.awaitTermination(300), "streaming snapshot did not complete within 300s"
+        _await_stream(q, 300, "streaming snapshot")
         snap_rows = (
             read_sketch_table(spark, table)
             .select("day", hll_count_sketch(F.col("sketch")).alias("stream_est"))

@@ -4,6 +4,7 @@ Spark-first (DataFrame + vectorized Arrow/pandas UDFs + mergeable
 partial aggregation). See SURVEY.md for the blueprint.
 """
 
+from . import _worker  # noqa: F401  (guards per-task zip re-reads in Spark workers)
 from .kernel import (
     HLL_P_DEFAULT,
     MURMUR_SEED,

@@ -350,26 +350,25 @@ def pfadd_blob(blob: bytes, elements, p: int | None = None) -> tuple[bytes, bool
     encoding = blob[4]
     if encoding > ENC_SPARSE:
         raise InvalidSketchError(f"unknown encoding byte {encoding}")
-    if p is None:
-        if encoding == ENC_DENSE:
+    if encoding == ENC_DENSE:
+        if p is None:
             p = int(len(blob[HDR_SIZE:]) * 8 // 6).bit_length() - 1
-        else:
-            p = int(decode_sparse(blob[HDR_SIZE:], None).size).bit_length() - 1
-    elif encoding == ENC_DENSE and len(blob) - HDR_SIZE != dense_size(p):
-        # a wrong caller-supplied p would silently write registers at wrong
-        # bit offsets (ADVICE r04) — validate against the payload length
-        raise InvalidSketchError(
-            f"dense payload is {len(blob) - HDR_SIZE} bytes, expected "
-            f"{dense_size(p)} for p={p}"
-        )
-    elif encoding == ENC_SPARSE and decode_sparse(blob[HDR_SIZE:], None).size != 1 << p:
+        elif len(blob) - HDR_SIZE != dense_size(p):
+            # a wrong caller-supplied p would silently write registers at
+            # wrong bit offsets (ADVICE r04) — validate the payload length
+            raise InvalidSketchError(
+                f"dense payload is {len(blob) - HDR_SIZE} bytes, expected "
+                f"{dense_size(p)} for p={p}"
+            )
+    else:
         # sparse payloads self-describe m via total run length (≤3000 B, so
-        # the verification decode is cheap) — a mismatched p would splice
-        # RLE runs against the wrong register space
-        raise InvalidSketchError(
-            f"sparse payload describes m={decode_sparse(blob[HDR_SIZE:], None).size}, "
-            f"expected {1 << p} for p={p}"
-        )
+        # one decode is cheap) — a mismatched p would splice RLE runs
+        # against the wrong register space
+        m = int(decode_sparse(blob[HDR_SIZE:], None).size)
+        if p is None:
+            p = m.bit_length() - 1
+        elif m != 1 << p:
+            raise InvalidSketchError(f"sparse payload describes m={m}, expected {1 << p} for p={p}")
     items = [e.encode("utf-8") if isinstance(e, str) else bytes(e) for e in elements]
     if not items:
         return blob, False

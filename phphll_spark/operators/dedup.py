@@ -376,8 +376,9 @@ def _priced_pairs(
     blockers. ONE lightweight job over ``rows`` (caller persists them or
     derives them narrowly from a persisted frame) prices the candidates
     AND collects the oversized-bucket keys together: sum of
-    C(min(bucket, cap), 2) is an upper bound on in-bucket pairs
-    pre-distinct (so ≥ the distinct pair count), which callers use to
+    C(bucket, 2) over the buckets within the cap (the rest are dropped)
+    is an upper bound on in-bucket pairs pre-distinct (so ≥ the distinct
+    pair count), which callers use to
     pick broadcast-vs-shuffle verification plans WITHOUT a separate
     count job on the pair frame; the > cap keys (≤ buckets·n/cap by
     construction) come back in the same action as a literal InSet
@@ -390,9 +391,10 @@ def _priced_pairs(
     ) % F.lit(1 << 32)
     sizes = rows.groupBy(c0, c1).agg(F.count("*").alias("_n"))
     if max_bucket_size is not None:
-        capped = F.least(F.col("_n"), F.lit(max_bucket_size))
+        # oversized buckets are dropped below, so none of their pairs count
+        kept = F.when(F.col("_n") <= max_bucket_size, F.col("_n"))
         summary = sizes.agg(
-            F.coalesce(F.sum(capped * (capped - 1) / 2), F.lit(0.0)).alias("est"),
+            F.coalesce(F.sum(kept * (kept - 1) / 2), F.lit(0.0)).alias("est"),
             F.collect_list(F.when(F.col("_n") > max_bucket_size, key)).alias("over"),
         ).first()
         est_pairs, oversized = int(summary["est"]), list(summary["over"])

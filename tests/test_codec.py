@@ -350,3 +350,25 @@ def test_pfadd_blob_validates_explicit_p():
             codec.pfadd_blob(sparse, [b"x"], p=bad_p)
     ok2, _ = codec.pfadd_blob(sparse, [b"x"], p=14)
     assert ok2[:4] == b"HYLL"
+
+
+def test_pfadd_blob_decodes_sparse_payload_once(monkeypatch):
+    """ADVICE r05: the sparse-p check decodes the payload once and reuses
+    it for the size check and the error message, with or without p."""
+    sparse, _ = codec.pfadd_blob(_empty_sparse_blob(), [b"a", b"b"])
+    calls = []
+    real = codec.decode_sparse
+
+    def counting(payload, p=None):
+        calls.append(p)
+        return real(payload, p)
+
+    monkeypatch.setattr(codec, "decode_sparse", counting)
+    for p in (None, 14):
+        calls.clear()
+        codec.pfadd_blob(sparse, [b"x"], p=p)
+        assert len(calls) == 1, p
+    calls.clear()
+    with pytest.raises(codec.InvalidSketchError, match="m=16384, expected 4096"):
+        codec.pfadd_blob(sparse, [b"x"], p=12)
+    assert len(calls) == 1

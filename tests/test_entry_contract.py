@@ -1,6 +1,10 @@
 """Driver-contract smoke: entry() runs with >0 rows and a stable schema;
 every oracle key has a query; full oracle parity is tools/check_oracles.py."""
 
+import os
+
+import pytest
+
 import __spark_entry__ as entry_mod
 
 
@@ -75,3 +79,50 @@ def test_dedup_paragraph_oracle_handles_empty_docs(spark, tmp_path):
     by_id = {r.doc_id: r for r in spdf.itertuples()}
     assert by_id[1].n_paras == 1 and by_id[1].n_kept == 1
     assert by_id[2].n_kept == 0 and by_id[3].n_kept == 0
+
+
+class _FakeQuery:
+    def __init__(self, finishes):
+        self.finishes, self.stopped = finishes, False
+
+    def awaitTermination(self, timeout):
+        return self.finishes
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_await_stream_raises_on_timeout():
+    """ADVICE r05: a stream that does not finish in time is stopped and
+    raises RuntimeError (an explicit raise, which python -O keeps)."""
+    q = _FakeQuery(finishes=False)
+    with pytest.raises(RuntimeError, match="replay did not complete within 300s"):
+        entry_mod._await_stream(q, 300, "replay")
+    assert q.stopped
+    done = _FakeQuery(finishes=True)
+    entry_mod._await_stream(done, 300, "replay")
+    assert not done.stopped
+
+
+def test_stamp_appended_orders_mtimes_by_write(tmp_path):
+    """ADVICE r05: each appended file gets a strictly later mtime than
+    every earlier one, even when the filesystem gave them equal or
+    reversed mtimes, so a file stream source replays them in write order."""
+    stamped = []
+
+    def write(name, mtime):
+        path = tmp_path / name
+        path.write_bytes(b"x")
+        os.utime(path, (mtime, mtime))
+
+    write("part-b.parquet", 1_000)
+    write(".part-b.parquet.crc", 1_000)
+    entry_mod._stamp_appended(str(tmp_path), stamped, 5_000)
+    write("part-a.parquet", 1_000)  # same mtime, sorts first by name
+    entry_mod._stamp_appended(str(tmp_path), stamped, 5_000)
+    write("part-0.parquet", 900)  # older mtime than both
+    entry_mod._stamp_appended(str(tmp_path), stamped, 5_000)
+    assert stamped == ["part-b.parquet", "part-a.parquet", "part-0.parquet"]
+    mtimes = [os.stat(tmp_path / n).st_mtime for n in stamped]
+    assert mtimes == sorted(set(mtimes)) and mtimes[0] == 5_000
+    assert os.stat(tmp_path / ".part-b.parquet.crc").st_mtime == 1_000

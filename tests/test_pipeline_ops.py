@@ -180,6 +180,21 @@ def test_dedup_minhash_shuffle_prefilter_same_pairs(spark, neardup_docs):
     assert broadcast_path == shuffle_path and len(shuffle_path) >= 20
 
 
+def test_priced_pairs_excludes_dropped_buckets(spark):
+    """ADVICE r05: buckets over max_bucket_size are dropped, so est_pairs
+    prices only the kept ones: C(3,2) + C(2,2) = 4, not the 7 that
+    counting the 5-doc bucket at the cap would give."""
+    from phphll_spark.operators.dedup import _priced_pairs
+
+    rows = [(0, 1, i) for i in range(10, 15)]  # 5 docs > cap 3: dropped
+    rows += [(0, 2, i) for i in (1, 2, 3)] + [(1, 7, i) for i in (4, 5)]
+    df = spark.createDataFrame(rows, "band int, bucket int, doc_id long")
+    pairs, est_pairs = _priced_pairs(df, "band", "bucket", "doc_id", 3)
+    assert est_pairs == 4
+    got = sorted(tuple(sorted((r["id_a"], r["id_b"]))) for r in pairs.collect())
+    assert got == [(1, 2), (1, 3), (2, 3), (4, 5)]
+
+
 def test_dedup_minhash_word_shingles(spark, neardup_docs):
     """shingle_unit='word' (the web-production Lee-et-al shingle): the
     planted adjacent-id near-dups are still found, pairs carry word-level
