@@ -1,0 +1,216 @@
+"""One Arrow-native fold driver for every sketch family.
+
+Every sketch in the library has the same distributed shape: each input
+partition folds its rows into one partial sketch per group
+(``mapInArrow``, vectorized per Arrow batch — the map-side combine), the
+shuffle carries only those sketches, never raw elements, and an
+associative merge aggregate combines them. The plumbing of that shape —
+group codes, sort-and-segment, the per-group accumulator, the output
+frame, the merge ``pandas_udf`` and the ``groupBy`` composer — lives here
+once. A new sketch is a family object, not a new fold.
+
+A family is a small picklable object built from its parameters. It
+supplies:
+
+- ``name`` (merge aggregate ``<name>_merge_agg``) and ``column`` (the
+  binary output column);
+- ``empty()``: a fresh state; it raises ``ValueError`` on bad parameters,
+  and the driver calls it once before any job starts;
+- ``batch(arr) -> (prepared, valid)``: the once-per-Arrow-batch work on
+  the value column (hashing, casts). ``prepared`` covers the non-NULL
+  rows only; ``valid`` is the row mask, or None when no value is NULL;
+- ``fold(state, prepared, sel) -> state``: fold the rows ``sel`` (an
+  index array into ``prepared``: one group's segment of the batch);
+- ``serialize(state) -> bytes``, ``deserialize(bytes) -> state`` and
+  ``merge(a, b) -> state`` over deserialized states.
+
+No per-row Python anywhere: values are hashed straight out of the Arrow
+buffers and group codes come from Arrow dictionary encoding, so a batch
+is never materialized as pandas objects.
+"""
+
+from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import BinaryType, StructField, StructType
+
+
+def _arrow_to_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """(uint8 data, int64 offsets, valid mask or None) of a string/binary
+    Arrow array; other types hash their Arrow string rendering. NULL
+    elements are dropped (Spark aggregate semantics ignore NULLs)."""
+    if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
+        arr = arr.cast(pa.large_binary())
+    elif not pa.types.is_large_binary(arr.type) and not pa.types.is_large_string(arr.type):
+        arr = arr.cast(pa.large_utf8())
+    if pa.types.is_large_string(arr.type):
+        arr = arr.cast(pa.large_binary())
+    null_mask = None
+    if arr.null_count:
+        null_mask = np.asarray(arr.is_valid())
+        arr = arr.drop_null()
+    buffers = arr.buffers()
+    offsets = np.frombuffer(buffers[1], dtype=np.int64, count=len(arr) + 1, offset=arr.offset * 8)
+    data_buf = buffers[2]
+    data = (
+        np.frombuffer(data_buf, dtype=np.uint8, count=int(offsets[-1]) - int(offsets[0]), offset=int(offsets[0]))
+        if data_buf is not None and len(arr)
+        else np.empty(0, np.uint8)
+    )
+    if int(offsets[0]) != 0:
+        offsets = offsets - offsets[0]
+    return data, offsets, null_mask
+
+
+def _arrow_group_codes(rb: pa.RecordBatch, keys: list[str]) -> tuple[np.ndarray, list[tuple]]:
+    """Per-row compact group codes + the unique key tuples they index,
+    via Arrow dictionary encoding (no pandas/object materialization).
+    NULL key values group as None, matching groupBy semantics."""
+
+    def one(name: str) -> tuple[np.ndarray, list]:
+        d = rb.column(rb.schema.get_field_index(name)).dictionary_encode()
+        vals = d.dictionary.to_pylist()
+        ind = d.indices
+        if ind.null_count:
+            ind = pc.fill_null(ind, len(vals))
+            vals = vals + [None]
+        return ind.to_numpy(zero_copy_only=False).astype(np.int64), vals
+
+    columns = [one(k) for k in keys]
+    if len(columns) == 1:
+        codes, vals = columns[0]
+        return codes, [(v,) for v in vals]
+    # mixed-radix code per row over the per-key codes, compacted to the
+    # combinations present
+    sizes = [len(vals) for _, vals in columns]
+    codes = np.ravel_multi_index([c for c, _ in columns], sizes)
+    uniq, inv = np.unique(codes, return_inverse=True)
+    per_key = [
+        [vals[i] for i in part.tolist()] for (_, vals), part in zip(columns, np.unravel_index(uniq, sizes))
+    ]
+    return inv.astype(np.int64), list(zip(*per_key))
+
+
+def _segments(codes: np.ndarray) -> Iterator[tuple[int, np.ndarray]]:
+    """(group code, row indices) of each group in ``codes``; a group's
+    rows keep their batch order (stable sort)."""
+    if len(codes) == 0:
+        return
+    order = np.argsort(codes, kind="stable")
+    sc = codes[order]
+    bounds = np.flatnonzero(np.diff(sc)) + 1
+    starts = np.concatenate(([0], bounds))
+    ends = np.concatenate((bounds, [len(sc)]))
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        yield int(sc[s]), order[s:e]
+
+
+@dataclass(frozen=True)
+class ObjectFamily:
+    """The family of a numeric sketch class with the KLL / t-digest
+    interface: ``cls(param)``, ``.add(float64 values)``, ``.merge(other)``,
+    ``.serialize()`` and ``cls.deserialize(blob)``."""
+
+    cls: type
+    param: int
+    name: str
+
+    @property
+    def column(self) -> str:
+        return self.name
+
+    def empty(self):
+        return self.cls(self.param)
+
+    def batch(self, arr: pa.Array):
+        arr = pc.cast(arr, pa.float64(), safe=False)
+        valid = np.asarray(arr.is_valid()) if arr.null_count else None
+        return arr.drop_null().to_numpy(zero_copy_only=False), valid
+
+    def fold(self, sk, vals: np.ndarray, sel):
+        sk.add(vals[sel])
+        return sk
+
+    def serialize(self, sk) -> bytes:
+        return sk.serialize()
+
+    def deserialize(self, blob: bytes):
+        return self.cls.deserialize(blob)
+
+    def merge(self, a, b):
+        return a.merge(b)
+
+
+def partial_sketches(df: DataFrame, keys: list[str], value_col: str, family) -> DataFrame:
+    """Per-partition, per-group partial sketches via ``mapInArrow``.
+
+    Output schema: ``keys..., <family.column> binary`` — one row per
+    (input partition, group). Every group present in the partition gets
+    a sketch, even if all of its values are NULL (an empty sketch), and
+    NULL keys form one group per partition."""
+    family.empty()  # bad parameters fail here, on the driver
+    out_schema = StructType(
+        [df.schema[k] for k in keys] + [StructField(family.column, BinaryType(), False)]
+    )
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: dict = {}
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            prepared, valid = family.batch(rb.column(rb.schema.get_field_index(value_col)))
+            if keys:
+                codes, groups = _arrow_group_codes(rb, keys)
+            else:
+                codes, groups = np.zeros(rb.num_rows, dtype=np.int64), [()]
+            for g in groups:
+                if g not in acc:
+                    acc[g] = family.empty()
+            for code, sel in _segments(codes if valid is None else codes[valid]):
+                g = groups[code]
+                acc[g] = family.fold(acc[g], prepared, sel)
+        if not acc:
+            return
+        rows = list(acc)
+        out = {k: [r[i] for r in rows] for i, k in enumerate(keys)}
+        out[family.column] = [family.serialize(acc[r]) for r in rows]
+        yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+
+    return df.select(*keys, value_col).mapInArrow(fold, schema=out_schema)
+
+
+def merge_agg(family):
+    """Grouped-agg pandas UDF ``<family.name>_merge_agg``: a column of
+    sketch blobs -> their merge. NULL blobs are skipped and an all-NULL
+    group merges to NULL: a default-parameter empty sketch there would
+    fail the next merge with a partial of other parameters."""
+
+    def merge(blobs: pd.Series) -> bytes:
+        acc = None
+        for blob in blobs:
+            if blob is None:
+                continue
+            state = family.deserialize(bytes(blob))
+            acc = state if acc is None else family.merge(acc, state)
+        return None if acc is None else family.serialize(acc)
+
+    merge.__name__ = f"{family.name}_merge_agg"
+    return pandas_udf(BinaryType())(merge)
+
+
+def sketch(df: DataFrame, keys: list[str], value_col: str, family) -> DataFrame:
+    """keys... + the merged ``family.column`` sketch per group (one global
+    row when ``keys`` is empty): partial fold, sketch-only shuffle, merge."""
+    merged = merge_agg(family)(F.col(family.column)).alias(family.column)
+    return partial_sketches(df, keys, value_col, family).groupBy(*keys).agg(merged)

@@ -273,7 +273,7 @@ def _arrow_doc_buffers(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     empty docs, no per-row Python and no byte copies."""
     import pyarrow.compute as pc
 
-    from .sketch import _arrow_to_buffers
+    from ..fold import _arrow_to_buffers
 
     if arr.null_count:
         arr = pc.fill_null(arr, "" if str(arr.type).endswith(("string", "utf8")) else b"")

@@ -3,8 +3,9 @@ DataFrame-level operators.
 
 Scale design (the part that matters at 10^12 rows):
 
-- ``hll_partial_sketches`` is a ``mapInArrow`` **map-side combine**: each
-  input partition folds its rows into one raw register array per group and
+- ``hll_partial_sketches`` is a ``mapInArrow`` **map-side combine** (the
+  shared fold driver, phphll_spark/fold.py, with ``HLLFamily``): each
+  input partition folds its rows into one register set per group and
   emits one ~(16 B..12 KB) sketch row per (partition, group). The shuffle
   that follows carries only those sketches — never raw elements. This
   mirrors the reference's batched ``pfAddMany`` hot path
@@ -23,6 +24,7 @@ No per-row Python anywhere: hashing reads Arrow string buffers directly
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -41,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from .. import codec, kernel
+from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, sketch
 from ..kernel import HLL_P_DEFAULT
 
 # In-flight sparse groups promote to a raw 2^p buffer past this many set
@@ -48,196 +51,75 @@ from ..kernel import HLL_P_DEFAULT
 # cap (hyperloglog.c:812-813): beyond it the raw buffer is both smaller
 # and faster to update.
 _SPARSE_PROMOTE_ENTRIES = 3072
-
-
-# ---------------------------------------------------------------------------
-# Arrow-buffer extraction: pd.Series[str|bytes] -> (uint8 data, int64 offsets)
-# ---------------------------------------------------------------------------
-
-def _series_to_buffers(series: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
-    """Zero-Python-loop extraction of the concatenated byte payload and
-    offsets from a pandas Series of strings/bytes via Arrow.
-
-    Returns (data, offsets, valid_mask); null elements are dropped by the
-    caller using the mask (Spark aggregate semantics ignore NULLs).
-    """
-    return _arrow_to_buffers(pa.array(series, from_pandas=True))
-
-
-def _arrow_to_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
-    """Buffer extraction straight from an Arrow array (the mapInArrow hot
-    path — the batch never becomes pandas objects)."""
-    if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
-        arr = arr.cast(pa.large_binary())
-    elif not pa.types.is_large_binary(arr.type) and not pa.types.is_large_string(arr.type):
-        arr = arr.cast(pa.large_utf8())
-    if pa.types.is_large_string(arr.type):
-        arr = arr.cast(pa.large_binary())
-    null_mask = None
-    if arr.null_count:
-        null_mask = np.asarray(arr.is_valid())
-        arr = arr.drop_null()
-    buffers = arr.buffers()
-    offsets = np.frombuffer(buffers[1], dtype=np.int64, count=len(arr) + 1, offset=arr.offset * 8)
-    data_buf = buffers[2]
-    data = (
-        np.frombuffer(data_buf, dtype=np.uint8, count=int(offsets[-1]) - int(offsets[0]), offset=int(offsets[0]))
-        if data_buf is not None and len(arr)
-        else np.empty(0, np.uint8)
-    )
-    if int(offsets[0]) != 0:
-        offsets = offsets - offsets[0]
-    return data, offsets, null_mask
-
-
-def _batch_idx_rho(series: pd.Series, p: int) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
-    data, offsets, valid = _series_to_buffers(series)
-    if len(offsets) <= 1:
-        return np.empty(0, np.int64), np.empty(0, np.uint8), valid
-    idx, rho = kernel.hash_idx_rho(kernel.murmur64a(data, offsets), p)
-    return idx, rho, valid
+_EMPTY_SPARSE = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint8))
 
 
 def _arrow_idx_rho(arr: pa.Array, p: int) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
     data, offsets, valid = _arrow_to_buffers(arr)
-    if len(offsets) <= 1:
-        return np.empty(0, np.int64), np.empty(0, np.uint8), valid
     idx, rho = kernel.hash_idx_rho(kernel.murmur64a(data, offsets), p)
     return idx, rho, valid
-
-
-def _arrow_group_codes(rb: pa.RecordBatch, keys: list[str]) -> tuple[np.ndarray, list[tuple]]:
-    """Per-row compact group codes + the unique key tuples they index,
-    via Arrow dictionary encoding (no pandas/object materialization).
-    NULL key values group as None, matching groupBy semantics."""
-
-    def one(name: str) -> tuple[np.ndarray, list]:
-        d = rb.column(rb.schema.get_field_index(name)).dictionary_encode()
-        vals = d.dictionary.to_pylist()
-        ind = d.indices
-        if ind.null_count:
-            import pyarrow.compute as pc
-
-            ind = pc.fill_null(ind, len(vals))
-            vals = vals + [None]
-        return ind.to_numpy(zero_copy_only=False).astype(np.int64), vals
-
-    codes, vals = one(keys[0])
-    if len(keys) == 1:
-        return codes, [(v,) for v in vals]
-    sizes = [len(vals)]
-    val_lists = [vals]
-    for k in keys[1:]:
-        c, v = one(k)
-        codes = codes * len(v) + c
-        sizes.append(len(v))
-        val_lists.append(v)
-    uniq_codes, inv = np.unique(codes, return_inverse=True)
-    tuples = []
-    for code in uniq_codes.tolist():
-        parts = []
-        rem = code
-        for s in reversed(sizes[1:]):
-            rem, r = divmod(rem, s)
-            parts.append(r)
-        parts.append(rem)
-        idxs = list(reversed(parts))
-        tuples.append(tuple(val_lists[i][idxs[i]] for i in range(len(keys))))
-    return inv.astype(np.int64), tuples
 
 
 # ---------------------------------------------------------------------------
 # Map-side partial aggregation (the scale path)
 # ---------------------------------------------------------------------------
 
-def hll_partial_sketches(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    p: int = HLL_P_DEFAULT,
-) -> DataFrame:
-    """Per-partition, per-group partial sketches via ``mapInArrow``.
+@dataclass(frozen=True)
+class HLLFamily:
+    """The HLL sketch family for the fold driver (phphll_spark/fold.py).
 
-    Arrow-native end to end: value bytes are hashed straight out of the
-    Arrow buffers and group codes come from Arrow dictionary encoding —
-    the batch is never materialized as pandas objects (worth ~2x on
-    ~300 B web texts).
+    In-flight state is SPARSE per group (sorted idx + rho arrays, the
+    distributed analog of the reference's sparse encoding) until a group
+    exceeds ``_SPARSE_PROMOTE_ENTRIES`` set registers, then it promotes to
+    a 2^p raw buffer — so a partition holding many tiny groups
+    (high-cardinality keys, rollups) costs O(set registers) per group,
+    not 16 KB each. Densifying is max-merge-exact, so sketches are
+    bit-identical to the always-dense path (tested)."""
 
-    Output schema: ``keys... , sketch binary`` — one row per (input
-    partition, group). In-flight state is SPARSE per group (sorted idx +
-    rho arrays, the distributed analog of the reference's sparse encoding)
-    until a group exceeds ``_SPARSE_PROMOTE_ENTRIES`` set registers, then
-    it promotes to a 2^p raw buffer — so a partition holding many tiny
-    groups (high-cardinality keys, rollups) costs O(set registers) per
-    group, not 16 KB each. Densifying is max-merge-exact, so estimates
-    are bit-identical to the always-dense path (tested).
-    """
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType(), False)])
-    arrow_schema = to_arrow_schema(out_schema)
-    m = kernel.m_for_p(p)
-    empty_i = np.empty(0, dtype=np.int64)
-    empty_r = np.empty(0, dtype=np.uint8)
+    p: int = HLL_P_DEFAULT
+    name = "hll"
+    column = "sketch"
 
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            varr = rb.column(rb.schema.get_field_index(value_col))
-            idx, rho, valid = _arrow_idx_rho(varr, p)
-            if not keys:
-                # single group: go straight to dense (it will fill anyway)
-                regs = acc.setdefault((), np.zeros(m, dtype=np.uint8))
-                if len(idx):
-                    kernel.update_registers(regs, idx, rho)
-                continue
-            codes_full, uniques_rows = _arrow_group_codes(rb, keys)
-            # every group present in the batch gets a sketch, even if all of
-            # its values are NULL (→ empty sketch, count 0)
-            for row in uniques_rows:
-                if row not in acc:
-                    acc[row] = (empty_i, empty_r)
-            codes = codes_full[valid] if valid is not None else codes_full
-            if len(idx) == 0:
-                continue
-            order = np.argsort(codes, kind="stable")
-            sc = codes[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sc)]))
-            si, sr = idx[order], rho[order]
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                row = uniques_rows[sc[s]]
-                cur = acc[row]
-                if isinstance(cur, np.ndarray):  # already dense
-                    np.maximum.at(cur, si[s:e], sr[s:e])
-                    continue
-                if e - s > _SPARSE_PROMOTE_ENTRIES:
-                    # heavy group (big batch slice): densify now — a raw
-                    # buffer is cheaper than sorting large sparse merges
-                    regs = kernel.sparse_to_registers(cur[0], cur[1], p)
-                    np.maximum.at(regs, si[s:e], sr[s:e])
-                    acc[row] = regs
-                    continue
-                ni, nr = kernel.sparse_update(cur[0], cur[1], si[s:e], sr[s:e])
-                if len(ni) > _SPARSE_PROMOTE_ENTRIES:
-                    acc[row] = kernel.sparse_to_registers(ni, nr, p)
-                else:
-                    acc[row] = (ni, nr)
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {k: [r[ki] for r in rows] for ki, k in enumerate(keys)}
-        out["sketch"] = [
-            codec.serialize(
-                v if isinstance(v := acc[r], np.ndarray) else kernel.sparse_to_registers(v[0], v[1], p)
-            )
-            for r in rows
-        ]
-        yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+    def empty(self):
+        kernel.m_for_p(self.p)
+        return _EMPTY_SPARSE
 
-    return df.select(*keys, value_col).mapInArrow(fold, schema=out_schema)
+    def batch(self, arr: pa.Array):
+        idx, rho, valid = _arrow_idx_rho(arr, self.p)
+        return (idx, rho), valid
+
+    def fold(self, state, prepared, sel):
+        idx, rho = prepared[0][sel], prepared[1][sel]
+        if isinstance(state, np.ndarray):  # already dense
+            kernel.update_registers(state, idx, rho)
+            return state
+        if len(idx) > _SPARSE_PROMOTE_ENTRIES:
+            # heavy group (big batch slice): densify now — a raw buffer
+            # is cheaper than sorting large sparse merges
+            regs = kernel.sparse_to_registers(state[0], state[1], self.p)
+            kernel.update_registers(regs, idx, rho)
+            return regs
+        ni, nr = kernel.sparse_update(state[0], state[1], idx, rho)
+        if len(ni) > _SPARSE_PROMOTE_ENTRIES:
+            return kernel.sparse_to_registers(ni, nr, self.p)
+        return ni, nr
+
+    def serialize(self, state) -> bytes:
+        if not isinstance(state, np.ndarray):
+            state = kernel.sparse_to_registers(state[0], state[1], self.p)
+        return codec.serialize(state)
+
+    def deserialize(self, blob: bytes) -> np.ndarray:
+        # the merge passes its p explicitly, for validation
+        return codec.deserialize(blob, self.p).regs
+
+    def merge(self, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        return kernel.merge_registers(a, b)
+
+
+def hll_partial_sketches(df: DataFrame, keys: list[str], value_col: str, p: int = HLL_P_DEFAULT) -> DataFrame:
+    """Per-partition, per-group partial sketches: ``keys..., sketch binary``."""
+    return partial_sketches(df, keys, value_col, HLLFamily(p))
 
 
 def hll_partial_sketches_multi(
@@ -273,7 +155,8 @@ def hll_partial_sketches_multi(
 
     from ..sketches.theta import _THETA_ONE, theta_fold, theta_serialize
 
-    assert all(c in value_cols for c in theta_cols)
+    if not set(theta_cols) <= set(value_cols):
+        raise ValueError(f"theta_cols {list(theta_cols)} must all be in value_cols {list(value_cols)}")
     out_schema = StructType(
         [StructField(f"sketch_{c}", BinaryType(), False) for c in value_cols]
         + [StructField(f"theta_{c}", BinaryType(), False) for c in theta_cols]
@@ -317,25 +200,10 @@ def hll_partial_sketches_multi(
 
 
 def make_hll_merge_agg(p: int = HLL_P_DEFAULT):
-    """Grouped-agg pandas UDF: column of HYLL blobs -> merged HYLL blob.
-
-    The final/merge half of the distributed aggregation; NULL inputs are
-    treated as empty sketches (hyperloglog.c:1293,1319).
-    """
-
-    @pandas_udf(BinaryType())
-    def hll_merge_agg(blobs: pd.Series) -> bytes:
-        acc = None
-        for blob in blobs:
-            if blob is None:
-                continue
-            regs = codec.deserialize(bytes(blob), p).regs
-            acc = regs if acc is None else kernel.merge_registers(acc, regs)
-        if acc is None:
-            acc = kernel.empty_registers(p)
-        return codec.serialize(acc)
-
-    return hll_merge_agg
+    """Grouped-agg pandas UDF ``hll_merge_agg``: column of HYLL blobs ->
+    merged HYLL blob (element-wise max). NULL blobs are skipped
+    (hyperloglog.c:1293,1319); an all-NULL group merges to NULL."""
+    return merge_agg(HLLFamily(p))
 
 
 def make_hll_sketch_agg(p: int = HLL_P_DEFAULT):
@@ -346,13 +214,12 @@ def make_hll_sketch_agg(p: int = HLL_P_DEFAULT):
     hll_count_distinct()/hll_partial_sketches() at scale.
     """
 
+    family = HLLFamily(p)
+
     @pandas_udf(BinaryType())
     def hll_sketch_agg(values: pd.Series) -> bytes:
-        regs = kernel.empty_registers(p)
-        idx, rho, _ = _batch_idx_rho(values, p)
-        if len(idx):
-            kernel.update_registers(regs, idx, rho)
-        return codec.serialize(regs)
+        prepared, _ = family.batch(pa.array(values, from_pandas=True))
+        return family.serialize(family.fold(family.empty(), prepared, slice(None)))
 
     return hll_sketch_agg
 
@@ -434,14 +301,9 @@ def hll_sketch(
     each partition's accumulator dict only holds its own groups — use when
     group cardinality is high relative to executor memory.
     """
-    src = df
     if pre_repartition and keys:
-        src = df.repartition(pre_repartition, *[F.col(k) for k in keys])
-    partials = hll_partial_sketches(src, keys, value_col, p)
-    merge = make_hll_merge_agg(p)
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("sketch")).alias("sketch"))
-    return partials.agg(merge(F.col("sketch")).alias("sketch"))
+        df = df.repartition(pre_repartition, *[F.col(k) for k in keys])
+    return sketch(df, keys, value_col, HLLFamily(p))
 
 
 def hll_count_distinct(

@@ -346,7 +346,8 @@ def _candidate_pairs_from_sigs(
     signatures and reuse them for the agreement prefilter. Returns
     (pairs, est_pairs) where est_pairs ≥ the distinct pair count (the
     capped in-bucket pair sum — used for prefilter plan choice)."""
-    assert num_hashes % bands == 0
+    if num_hashes % bands:
+        raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
     r = num_hashes // bands
     banded = sigs.select(
         F.col(id_col),

@@ -43,7 +43,7 @@ from pyspark.sql.types import (
 )
 
 from .. import codec, kernel
-from ..functions.sketch import _batch_idx_rho, hll_count_sketch, make_hll_merge_agg
+from ..functions.sketch import hll_count_sketch, make_hll_merge_agg
 from ..kernel import HLL_P_DEFAULT
 
 MANIFEST = "manifest.json"
@@ -95,7 +95,8 @@ def _fold_with_lineage(key_cols: list[str], value_col: str, p: int):
     functions.sketch.hll_partial_sketches, plus per-group lineage."""
     import pyarrow as pa
 
-    from ..functions.sketch import _arrow_group_codes, _arrow_idx_rho
+    from ..fold import _arrow_group_codes, _segments
+    from ..functions.sketch import _arrow_idx_rho
     from pyspark.sql.pandas.types import to_arrow_schema
 
     m = kernel.m_for_p(p)
@@ -117,16 +118,8 @@ def _fold_with_lineage(key_cols: list[str], value_col: str, p: int):
                     acc[row] = [np.zeros(m, dtype=np.uint8), 0]
                 acc[row][1] += int(counts_full[gi])
             codes = codes_full[valid] if valid is not None else codes_full
-            if len(idx) == 0:
-                continue
-            order = np.argsort(codes, kind="stable")
-            sc = codes[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sc)]))
-            si, sr = idx[order], rho[order]
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                np.maximum.at(acc[uniques_rows[sc[s]]][0], si[s:e], sr[s:e])
+            for code, sel in _segments(codes):
+                np.maximum.at(acc[uniques_rows[code]][0], idx[sel], rho[sel])
         if not acc:
             return
         wall = time.time() - t0
@@ -302,9 +295,7 @@ def run_summary_pipeline(
 
     def finish(allp: DataFrame) -> DataFrame:
         merge = merge_agg_factory()
-        if key_cols:
-            return allp.groupBy(*key_cols).agg(merge(F.col(sketch_col)).alias(sketch_col))
-        return allp.agg(merge(F.col(sketch_col)).alias(sketch_col))
+        return allp.groupBy(*key_cols).agg(merge(F.col(sketch_col)).alias(sketch_col))
 
     def empty_result() -> DataFrame:
         key_fields = (

@@ -60,9 +60,6 @@ def register_sketch_sql_functions(spark) -> None:
     scalars ``cms_point_estimate`` / ``bloom_might_contain`` /
     ``tdigest_quantile`` / ``kll_quantile``.
     """
-    from .kll import kll_quantile as _kll_q
-    from .tdigest import tdigest_quantile as _td_q
-
     spark.udf.register("cms_merge_agg", make_cms_merge_agg())
     spark.udf.register("bloom_merge_agg", make_bloom_merge_agg())
     spark.udf.register("tdigest_merge_agg", make_tdigest_merge_agg())
@@ -70,8 +67,8 @@ def register_sketch_sql_functions(spark) -> None:
     spark.udf.register("mg_merge_agg", make_mg_merge_agg())
     spark.udf.register("cms_point_estimate", cms_point_estimate)
     spark.udf.register("bloom_might_contain", bloom_might_contain)
-    spark.udf.register("tdigest_quantile", _td_q)
-    spark.udf.register("kll_quantile", _kll_q)
+    spark.udf.register("tdigest_quantile", tdigest_quantile)
+    spark.udf.register("kll_quantile", kll_quantile)
     spark.udf.register("mg_point_estimate", mg_point_estimate)
     spark.udf.register("theta_merge_agg", make_theta_merge_agg())
     spark.udf.register("theta_estimate", theta_estimate)

@@ -13,16 +13,18 @@ little-endian uint64 words.
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BinaryType, BooleanType, StructField, StructType
+from pyspark.sql.types import BooleanType
 
 from .. import kernel
+from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, sketch
 
 MAGIC = b"BLMK"
 _SEED1 = 0x2545F491
@@ -42,7 +44,8 @@ def optimal_params(n_items: int, fp_rate: float = 0.01) -> tuple[int, int]:
 
 
 def empty_bloom(m_bits: int = 8192) -> np.ndarray:
-    assert m_bits % 64 == 0
+    if m_bits <= 0 or m_bits % 64:
+        raise ValueError(f"bloom m_bits must be a positive multiple of 64, got {m_bits}")
     return np.zeros(m_bits // 64, dtype=np.uint64)
 
 
@@ -54,18 +57,17 @@ def _bit_positions(data: np.ndarray, offsets: np.ndarray, m_bits: int, k: int) -
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
 
 
-def bloom_update(words: np.ndarray, data: np.ndarray, offsets: np.ndarray, k: int) -> None:
-    if len(offsets) <= 1:
-        return
-    pos = _bit_positions(data, offsets, words.size * 64, k).reshape(-1)
+def _set_bits(words: np.ndarray, pos: np.ndarray) -> None:
+    pos = pos.reshape(-1)
     np.bitwise_or.at(words, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64))
+
+
+def bloom_update(words: np.ndarray, data: np.ndarray, offsets: np.ndarray, k: int) -> None:
+    _set_bits(words, _bit_positions(data, offsets, words.size * 64, k))
 
 
 def bloom_contains(words: np.ndarray, data: np.ndarray, offsets: np.ndarray, k: int) -> np.ndarray:
     """Vectorized membership test for a batch of items -> bool array."""
-    n = len(offsets) - 1
-    if n <= 0:
-        return np.zeros(0, dtype=bool)
     pos = _bit_positions(data, offsets, words.size * 64, k)
     bits = (words[pos >> 6] >> (pos & 63).astype(np.uint64)) & np.uint64(1)
     return bits.all(axis=1)
@@ -93,82 +95,51 @@ def bloom_deserialize(blob: bytes) -> tuple[np.ndarray, int]:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface
+# Spark surface: the shared fold driver (phphll_spark/fold.py)
 # ---------------------------------------------------------------------------
+
+@dataclass(frozen=True)
+class BloomFamily:
+    """State: (words, k)."""
+
+    m_bits: int = 65536
+    k: int = 7
+    name = column = "bloom"
+
+    def empty(self) -> tuple[np.ndarray, int]:
+        return empty_bloom(self.m_bits), self.k
+
+    def batch(self, arr: pa.Array):
+        data, offsets, valid = _arrow_to_buffers(arr)
+        return _bit_positions(data, offsets, self.m_bits, self.k), valid
+
+    def fold(self, state, pos: np.ndarray, sel):
+        _set_bits(state[0], pos[sel])
+        return state
+
+    def serialize(self, state) -> bytes:
+        return bloom_serialize(*state)
+
+    deserialize = staticmethod(bloom_deserialize)
+
+    def merge(self, a, b):
+        if a[1] != b[1]:
+            raise InvalidBloomError(f"cannot merge blooms of {a[1]} and {b[1]} hash functions")
+        return bloom_merge(a[0], b[0]), a[1]
+
 
 def bloom_partial_sketches(
     df: DataFrame, keys: list[str], value_col: str, m_bits: int = 65536, k: int = 7
 ) -> DataFrame:
-    from ..functions.sketch import _series_to_buffers
-
-    key_fields = [df.schema[kk] for kk in keys]
-    out_schema = StructType(list(key_fields) + [StructField("bloom", BinaryType(), False)])
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            data, offsets, valid = _series_to_buffers(pdf[value_col])
-            if not keys:
-                codes = np.zeros(max(len(offsets) - 1, 0), dtype=np.int64)
-                uniques_rows = [()]
-            else:
-                if len(keys) == 1:
-                    codes_full, uniques = pd.factorize(pdf[keys[0]], use_na_sentinel=False)
-                    uniques_rows = [(u,) for u in uniques]
-                else:
-                    mi = pd.MultiIndex.from_frame(pdf[keys])
-                    codes_full, uniques = pd.factorize(mi, use_na_sentinel=False)
-                    uniques_rows = list(uniques)
-                codes = codes_full[valid] if valid is not None else codes_full
-            for row in uniques_rows:
-                if row not in acc:
-                    acc[row] = empty_bloom(m_bits)
-            if len(offsets) <= 1:
-                continue
-            pos_all = _bit_positions(data, offsets, m_bits, k)
-            order = np.argsort(codes, kind="stable")
-            sc = codes[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sc)]))
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                words = acc[uniques_rows[sc[s]]]
-                pos = pos_all[order[s:e]].reshape(-1)
-                np.bitwise_or.at(words, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64))
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {kk: [r[ki] for r in rows] for ki, kk in enumerate(keys)}
-        out["bloom"] = [bloom_serialize(acc[r], k) for r in rows]
-        yield pd.DataFrame(out)
-
-    return df.select(*keys, value_col).mapInPandas(fold, schema=out_schema)
+    return partial_sketches(df, keys, value_col, BloomFamily(m_bits, k))
 
 
 def make_bloom_merge_agg():
-    @pandas_udf(BinaryType())
-    def bloom_merge_agg(blobs: pd.Series) -> bytes:
-        acc, kk = None, 7
-        for blob in blobs:
-            if blob is None:
-                continue
-            words, kk = bloom_deserialize(bytes(blob))
-            acc = words if acc is None else bloom_merge(acc, words)
-        if acc is None:
-            acc = empty_bloom()
-        return bloom_serialize(acc, kk)
-
-    return bloom_merge_agg
+    return merge_agg(BloomFamily())
 
 
 def bloom_sketch(df: DataFrame, keys: list[str], value_col: str, m_bits: int = 65536, k: int = 7) -> DataFrame:
-    partials = bloom_partial_sketches(df, keys, value_col, m_bits, k)
-    merge = make_bloom_merge_agg()
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("bloom")).alias("bloom"))
-    return partials.agg(merge(F.col("bloom")).alias("bloom"))
+    return sketch(df, keys, value_col, BloomFamily(m_bits, k))
 
 
 @pandas_udf(BooleanType())

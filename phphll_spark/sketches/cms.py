@@ -13,16 +13,18 @@ counters — small header in the spirit of the reference's HYLL framing.
 
 from __future__ import annotations
 
-from typing import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+from pyspark.sql.types import LongType
 
 from .. import kernel
+from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, sketch
 
 MAGIC = b"CMSK"
 # independent row hashes: one murmur per row-seed (seed derived from base)
@@ -37,14 +39,20 @@ def empty_cms(depth: int = 4, width: int = 2048) -> np.ndarray:
     return np.zeros((depth, width), dtype=np.int64)
 
 
+def _row_columns(data: np.ndarray, offsets: np.ndarray, depth: int, width: int) -> np.ndarray:
+    """(depth, n_items) counter columns: one murmur pass per sketch row."""
+    w = np.uint64(width)
+    return np.stack(
+        [
+            (kernel.murmur64a(data, offsets, seed=(_ROW_SEED_BASE + row) & 0xFFFFFFFF) % w).astype(np.int64)
+            for row in range(depth)
+        ]
+    )
+
+
 def cms_update(cms: np.ndarray, data: np.ndarray, offsets: np.ndarray) -> None:
     """Fold a batch of byte strings (Arrow buffers) into the sketch."""
-    if len(offsets) <= 1:
-        return
-    d, w = cms.shape
-    for row in range(d):
-        h = kernel.murmur64a(data, offsets, seed=(_ROW_SEED_BASE + row) & 0xFFFFFFFF)
-        np.add.at(cms[row], (h % np.uint64(w)).astype(np.int64), 1)
+    CMSFamily(*cms.shape).fold(cms, _row_columns(data, offsets, *cms.shape), slice(None))
 
 
 def cms_merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -55,13 +63,8 @@ def cms_merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 def cms_query(cms: np.ndarray, items_data: np.ndarray, items_offsets: np.ndarray) -> np.ndarray:
     """Point frequency estimates for a batch of items (min over rows)."""
-    d, w = cms.shape
-    n = len(items_offsets) - 1
-    est = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-    for row in range(d):
-        h = kernel.murmur64a(items_data, items_offsets, seed=(_ROW_SEED_BASE + row) & 0xFFFFFFFF)
-        est = np.minimum(est, cms[row, (h % np.uint64(w)).astype(np.int64)])
-    return est
+    cols = _row_columns(items_data, items_offsets, *cms.shape)
+    return cms[np.arange(cms.shape[0])[:, None], cols].min(axis=0)
 
 
 def cms_serialize(cms: np.ndarray) -> bytes:
@@ -81,92 +84,44 @@ def cms_deserialize(blob: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface (same partial/merge shape as hll_*)
+# Spark surface: the shared fold driver (phphll_spark/fold.py)
 # ---------------------------------------------------------------------------
+
+@dataclass(frozen=True)
+class CMSFamily:
+    depth: int = 4
+    width: int = 2048
+    name = column = "cms"
+
+    def empty(self) -> np.ndarray:
+        return empty_cms(self.depth, self.width)
+
+    def batch(self, arr: pa.Array):
+        data, offsets, valid = _arrow_to_buffers(arr)
+        return _row_columns(data, offsets, self.depth, self.width), valid
+
+    def fold(self, cms: np.ndarray, cols: np.ndarray, sel) -> np.ndarray:
+        for row in range(cms.shape[0]):
+            np.add.at(cms[row], cols[row][sel], 1)
+        return cms
+
+    serialize = staticmethod(cms_serialize)
+    deserialize = staticmethod(cms_deserialize)
+    merge = staticmethod(cms_merge)
+
 
 def cms_partial_sketches(
     df: DataFrame, keys: list[str], value_col: str, depth: int = 4, width: int = 2048
 ) -> DataFrame:
-    from ..functions.sketch import _series_to_buffers
-
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = StructType(list(key_fields) + [StructField("cms", BinaryType(), False)])
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            data, offsets, valid = _series_to_buffers(pdf[value_col])
-            if not keys:
-                codes = np.zeros(max(len(offsets) - 1, 0), dtype=np.int64)
-                uniques_rows = [()]
-            else:
-                if len(keys) == 1:
-                    codes_full, uniques = pd.factorize(pdf[keys[0]], use_na_sentinel=False)
-                    uniques_rows = [(u,) for u in uniques]
-                else:
-                    mi = pd.MultiIndex.from_frame(pdf[keys])
-                    codes_full, uniques = pd.factorize(mi, use_na_sentinel=False)
-                    uniques_rows = list(uniques)
-                codes = codes_full[valid] if valid is not None else codes_full
-            for row in uniques_rows:
-                if row not in acc:
-                    acc[row] = empty_cms(depth, width)
-            n_items = len(offsets) - 1
-            if n_items <= 0:
-                continue
-            # hash the whole batch once per sketch row, then scatter-add
-            # each group's slice — no per-item Python
-            cols = [
-                (
-                    kernel.murmur64a(data, offsets, seed=(_ROW_SEED_BASE + r) & 0xFFFFFFFF)
-                    % np.uint64(width)
-                ).astype(np.int64)
-                for r in range(depth)
-            ]
-            order = np.argsort(codes, kind="stable")
-            sc = codes[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sc)]))
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                g = acc[uniques_rows[sc[s]]]
-                sel = order[s:e]
-                for r in range(depth):
-                    np.add.at(g[r], cols[r][sel], 1)
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {k: [r[ki] for r in rows] for ki, k in enumerate(keys)}
-        out["cms"] = [cms_serialize(acc[r]) for r in rows]
-        yield pd.DataFrame(out)
-
-    return df.select(*keys, value_col).mapInPandas(fold, schema=out_schema)
+    return partial_sketches(df, keys, value_col, CMSFamily(depth, width))
 
 
 def make_cms_merge_agg():
-    @pandas_udf(BinaryType())
-    def cms_merge_agg(blobs: pd.Series) -> bytes:
-        acc = None
-        for blob in blobs:
-            if blob is None:
-                continue
-            m = cms_deserialize(bytes(blob))
-            acc = m if acc is None else cms_merge(acc, m)
-        if acc is None:
-            acc = empty_cms()
-        return cms_serialize(acc)
-
-    return cms_merge_agg
+    return merge_agg(CMSFamily())
 
 
 def cms_sketch(df: DataFrame, keys: list[str], value_col: str, depth: int = 4, width: int = 2048) -> DataFrame:
-    partials = cms_partial_sketches(df, keys, value_col, depth, width)
-    merge = make_cms_merge_agg()
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("cms")).alias("cms"))
-    return partials.agg(merge(F.col("cms")).alias("cms"))
+    return sketch(df, keys, value_col, CMSFamily(depth, width))
 
 
 @pandas_udf(LongType())

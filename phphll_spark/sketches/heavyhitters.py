@@ -27,13 +27,17 @@ spirit as the reference's HYLL framing (hyperloglog.c:1120-1176).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
+from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BinaryType, LongType, StringType
+from pyspark.sql.types import LongType
+
+from ..fold import merge_agg, partial_sketches, sketch
 
 MAGIC = b"MGHH"
 
@@ -43,16 +47,11 @@ class InvalidMGError(ValueError):
 
 
 def mg_fold(counts: dict[bytes, int], items: pd.Series, k: int) -> int:
-    """Fold a batch of items into the summary dict (vectorized
-    value_counts per batch, one decrement pass when the dict overflows).
-    Returns the number of non-null items folded."""
-    vc = items.dropna().astype(str).value_counts()
-    for key, c in vc.items():
-        kb = key.encode()
-        counts[kb] = counts.get(kb, 0) + int(c)
-    if len(counts) > k:
-        _decrement_to_capacity(counts, k)
-    return int(vc.sum())
+    """Fold a batch of items into the summary dict in place. Returns the
+    number of non-null items folded."""
+    family = MGFamily(k)
+    prepared, _ = family.batch(pa.array(items, from_pandas=True))
+    return family.fold((counts, 0, k), prepared, slice(None))[1]
 
 
 def _decrement_to_capacity(counts: dict[bytes, int], k: int) -> None:
@@ -118,103 +117,60 @@ def mg_deserialize(blob: bytes) -> tuple[dict[bytes, int], int, int]:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface (same partial/merge shape as hll_* / cms_*)
+# Spark surface: the shared fold driver (phphll_spark/fold.py)
 # ---------------------------------------------------------------------------
 
+@dataclass(frozen=True)
+class MGFamily:
+    """State: (counts, N, k). Per batch the value column is dictionary
+    encoded once; a group's segment is counted with one ``np.unique`` over
+    its value codes, so the only Python loop is over the segment's
+    DISTINCT values, never its rows."""
+
+    k: int = 256
+    name = column = "mg"
+
+    def empty(self):
+        return {}, 0, self.k
+
+    def batch(self, arr: pa.Array):
+        enc = arr.dictionary_encode()
+        keys = [str(v).encode() for v in enc.dictionary.to_pylist()]
+        ind = enc.indices
+        valid = np.asarray(ind.is_valid()) if ind.null_count else None
+        return (keys, ind.drop_null().to_numpy(zero_copy_only=False).astype(np.int64)), valid
+
+    def fold(self, state, prepared, sel):
+        counts, n, k = state
+        keys, codes = prepared
+        uniq, cnt = np.unique(codes[sel], return_counts=True)
+        for vi, c in zip(uniq.tolist(), cnt.tolist()):
+            counts[keys[vi]] = counts.get(keys[vi], 0) + c
+        _decrement_to_capacity(counts, k)
+        return counts, n + int(cnt.sum()), k
+
+    def serialize(self, state) -> bytes:
+        return mg_serialize(*state)
+
+    deserialize = staticmethod(mg_deserialize)
+
+    def merge(self, a, b):
+        if a[2] != b[2]:
+            raise InvalidMGError(f"cannot merge MG of capacities {a[2]} and {b[2]}")
+        counts, n = mg_merge(a[:2], b[:2], a[2])
+        return counts, n, a[2]
+
+
 def mg_partial_sketches(df: DataFrame, keys: list[str], value_col: str, k: int = 256) -> DataFrame:
-    """Per-partition (optionally per-group) MG summaries via ``mapInArrow``
-    — narrow fold, shuffle carries only ≤k-entry summaries.
-
-    Arrow-native: per batch, group codes come from Arrow dictionary
-    encoding (functions/sketch.py helper) and (group, value) counts from
-    one combined-code ``np.unique`` — the only Python loop is over the
-    batch's UNIQUE (group, value) pairs, never its rows."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructField, StructType
-
-    from ..functions.sketch import _arrow_group_codes
-
-    key_fields = [df.schema[kk] for kk in keys]
-    out_schema = StructType(list(key_fields) + [StructField("mg", BinaryType(), False)])
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict = {}  # key_tuple -> [counts_dict, n]
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            varr = rb.column(rb.schema.get_field_index(value_col))
-            venc = varr.dictionary_encode()
-            vvals = venc.dictionary.to_pylist()
-            vcodes = venc.indices.to_numpy(zero_copy_only=False)
-            valid = ~np.isnan(vcodes) if vcodes.dtype.kind == "f" else np.ones(len(vcodes), bool)
-            vcodes = np.where(valid, vcodes, 0).astype(np.int64)
-            if keys:
-                gcodes, uniq_rows = _arrow_group_codes(rb, keys)
-            else:
-                gcodes, uniq_rows = np.zeros(rb.num_rows, dtype=np.int64), [()]
-            for row in uniq_rows:
-                if row not in acc:
-                    acc[row] = [{}, 0]
-            if not valid.any():
-                continue
-            pair = gcodes[valid] * len(vvals) + vcodes[valid]
-            upair, ucnt = np.unique(pair, return_counts=True)
-            ug, uv = np.divmod(upair, len(vvals))
-            touched = set()
-            for gi, vi, c in zip(ug.tolist(), uv.tolist(), ucnt.tolist()):
-                row = uniq_rows[gi]
-                entry = acc[row]
-                key = str(vvals[vi]).encode()
-                entry[0][key] = entry[0].get(key, 0) + c
-                entry[1] += c
-                touched.add(row)
-            for row in touched:
-                if len(acc[row][0]) > k:
-                    _decrement_to_capacity(acc[row][0], k)
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {kk: [r[ki] for r in rows] for ki, kk in enumerate(keys)}
-        out["mg"] = [mg_serialize(acc[r][0], acc[r][1], k) for r in rows]
-        yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-
-    return df.select(*keys, value_col).mapInArrow(fold, schema=out_schema)
+    return partial_sketches(df, keys, value_col, MGFamily(k))
 
 
 def make_mg_merge_agg():
-    @pandas_udf(BinaryType())
-    def mg_merge_agg(blobs: pd.Series) -> bytes:
-        acc = None
-        kk = None
-        for blob in blobs:
-            if blob is None:
-                continue
-            counts, n, k = mg_deserialize(bytes(blob))
-            if acc is None:
-                acc, kk = (counts, n), k
-            else:
-                if k != kk:
-                    raise InvalidMGError(f"cannot merge MG of capacities {kk} and {k}")
-                acc = mg_merge(acc, (counts, n), kk)
-        if acc is None:
-            # empty input -> NULL, not a k=0 sentinel that would poison
-            # later merges with real-capacity summaries
-            return None
-        return mg_serialize(acc[0], acc[1], kk)
-
-    return mg_merge_agg
+    return merge_agg(MGFamily())
 
 
 def mg_sketch(df: DataFrame, keys: list[str], value_col: str, k: int = 256) -> DataFrame:
-    partials = mg_partial_sketches(df, keys, value_col, k)
-    merge = make_mg_merge_agg()
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("mg")).alias("mg"))
-    return partials.agg(merge(F.col("mg")).alias("mg"))
+    return sketch(df, keys, value_col, MGFamily(k))
 
 
 @pandas_udf(LongType())

@@ -16,14 +16,14 @@ uint64 total_n.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType
+
+from ..fold import ObjectFamily, merge_agg, partial_sketches, sketch
 
 MAGIC = b"KLLQ"
 _C = 2.0 / 3.0
@@ -167,74 +167,19 @@ class KLL:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface (same shape as tdigest)
+# Spark surface: the shared fold driver (phphll_spark/fold.py)
 # ---------------------------------------------------------------------------
 
 def kll_partial_sketches(df: DataFrame, keys: list[str], value_col: str, k: int = 200) -> DataFrame:
-    key_fields = [df.schema[kk] for kk in keys]
-    out_schema = StructType(list(key_fields) + [StructField("kll", BinaryType(), False)])
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            if not keys:
-                groups = {(): np.arange(len(vals))}
-            else:
-                if len(keys) == 1:
-                    codes, uniques = pd.factorize(pdf[keys[0]], use_na_sentinel=False)
-                    uniques_rows = [(u,) for u in uniques]
-                else:
-                    mi = pd.MultiIndex.from_frame(pdf[keys])
-                    codes, uniques = pd.factorize(mi, use_na_sentinel=False)
-                    uniques_rows = list(uniques)
-                order = np.argsort(codes, kind="stable")
-                sc = codes[order]
-                bounds = np.flatnonzero(np.diff(sc)) + 1
-                starts = np.concatenate(([0], bounds))
-                ends = np.concatenate((bounds, [len(sc)]))
-                groups = {
-                    uniques_rows[sc[s]]: order[s:e] for s, e in zip(starts.tolist(), ends.tolist())
-                }
-            for gk, sel in groups.items():
-                sk = acc.get(gk)
-                if sk is None:
-                    sk = acc[gk] = KLL(k)
-                sk.add(vals[sel])
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {kk: [r[ki] for r in rows] for ki, kk in enumerate(keys)}
-        out["kll"] = [acc[r].serialize() for r in rows]
-        yield pd.DataFrame(out)
-
-    return df.select(*keys, value_col).mapInPandas(fold, schema=out_schema)
+    return partial_sketches(df, keys, value_col, ObjectFamily(KLL, k, "kll"))
 
 
 def make_kll_merge_agg(k: int = 200):
-    @pandas_udf(BinaryType())
-    def kll_merge_agg(blobs: pd.Series) -> bytes:
-        acc = None
-        for blob in blobs:
-            if blob is None:
-                continue
-            sk = KLL.deserialize(bytes(blob))
-            acc = sk if acc is None else acc.merge(sk)
-        if acc is None:
-            acc = KLL(k)
-        return acc.serialize()
-
-    return kll_merge_agg
+    return merge_agg(ObjectFamily(KLL, k, "kll"))
 
 
 def kll_sketch(df: DataFrame, keys: list[str], value_col: str, k: int = 200) -> DataFrame:
-    partials = kll_partial_sketches(df, keys, value_col, k)
-    merge = make_kll_merge_agg(k)
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("kll")).alias("kll"))
-    return partials.agg(merge(F.col("kll")).alias("kll"))
+    return sketch(df, keys, value_col, ObjectFamily(KLL, k, "kll"))
 
 
 @pandas_udf(DoubleType())

@@ -15,14 +15,14 @@ n float64 means + n float64 weights (LE) + float64 min + float64 max.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType
+
+from ..fold import ObjectFamily, merge_agg, partial_sketches, sketch
 
 MAGIC = b"TDIG"
 
@@ -137,76 +137,19 @@ class TDigest:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface
+# Spark surface: the shared fold driver (phphll_spark/fold.py)
 # ---------------------------------------------------------------------------
 
-def tdigest_partial_sketches(
-    df: DataFrame, keys: list[str], value_col: str, delta: int = 200
-) -> DataFrame:
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = StructType(list(key_fields) + [StructField("tdigest", BinaryType(), False)])
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            if not keys:
-                groups = {(): np.arange(len(vals))}
-            else:
-                if len(keys) == 1:
-                    codes, uniques = pd.factorize(pdf[keys[0]], use_na_sentinel=False)
-                    uniques_rows = [(u,) for u in uniques]
-                else:
-                    mi = pd.MultiIndex.from_frame(pdf[keys])
-                    codes, uniques = pd.factorize(mi, use_na_sentinel=False)
-                    uniques_rows = list(uniques)
-                order = np.argsort(codes, kind="stable")
-                sc = codes[order]
-                bounds = np.flatnonzero(np.diff(sc)) + 1
-                starts = np.concatenate(([0], bounds))
-                ends = np.concatenate((bounds, [len(sc)]))
-                groups = {
-                    uniques_rows[sc[s]]: order[s:e] for s, e in zip(starts.tolist(), ends.tolist())
-                }
-            for gk, sel in groups.items():
-                td = acc.get(gk)
-                if td is None:
-                    td = acc[gk] = TDigest(delta)
-                td.add(vals[sel])
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {k: [r[ki] for r in rows] for ki, k in enumerate(keys)}
-        out["tdigest"] = [acc[r].serialize() for r in rows]
-        yield pd.DataFrame(out)
-
-    return df.select(*keys, value_col).mapInPandas(fold, schema=out_schema)
+def tdigest_partial_sketches(df: DataFrame, keys: list[str], value_col: str, delta: int = 200) -> DataFrame:
+    return partial_sketches(df, keys, value_col, ObjectFamily(TDigest, delta, "tdigest"))
 
 
 def make_tdigest_merge_agg(delta: int = 200):
-    @pandas_udf(BinaryType())
-    def tdigest_merge_agg(blobs: pd.Series) -> bytes:
-        acc = None
-        for blob in blobs:
-            if blob is None:
-                continue
-            td = TDigest.deserialize(bytes(blob))
-            acc = td if acc is None else acc.merge(td)
-        if acc is None:
-            acc = TDigest(delta)
-        return acc.serialize()
-
-    return tdigest_merge_agg
+    return merge_agg(ObjectFamily(TDigest, delta, "tdigest"))
 
 
 def tdigest_sketch(df: DataFrame, keys: list[str], value_col: str, delta: int = 200) -> DataFrame:
-    partials = tdigest_partial_sketches(df, keys, value_col, delta)
-    merge = make_tdigest_merge_agg(delta)
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("tdigest")).alias("tdigest"))
-    return partials.agg(merge(F.col("tdigest")).alias("tdigest"))
+    return sketch(df, keys, value_col, ObjectFamily(TDigest, delta, "tdigest"))
 
 
 @pandas_udf(DoubleType())

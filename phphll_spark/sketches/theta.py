@@ -37,19 +37,22 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import BinaryType, BooleanType, DoubleType, LongType
 
 from .. import kernel
+from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, sketch
 
 MAGIC = b"THTA"
 _THETA_ONE = np.uint64(0xFFFFFFFFFFFFFFFF)
+_EMPTY = np.empty(0, dtype=np.uint64)
 
 
 class InvalidThetaError(ValueError):
@@ -133,95 +136,53 @@ def theta_deserialize(blob: bytes) -> tuple[np.ndarray, np.uint64, int]:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface (same partial/merge shape as hll_* / mg_*)
+# Spark surface: the shared fold driver (phphll_spark/fold.py)
 # ---------------------------------------------------------------------------
+
+@dataclass(frozen=True)
+class ThetaFamily:
+    """State: (entries, theta, k); values are hashed straight from the
+    Arrow buffers with the repo's murmur64a, and the shuffle carries
+    ≤(20 + 8k)-byte sketches."""
+
+    k: int = 4096
+    name = column = "theta"
+
+    def empty(self):
+        return _EMPTY, _THETA_ONE, self.k
+
+    def batch(self, arr: pa.Array):
+        data, offsets, valid = _arrow_to_buffers(arr)
+        return kernel.murmur64a(data, offsets), valid
+
+    def fold(self, state, hashes: np.ndarray, sel):
+        entries, theta, k = state
+        return (*theta_fold(entries, theta, hashes[sel], k), k)
+
+    def serialize(self, state) -> bytes:
+        return theta_serialize(*state)
+
+    deserialize = staticmethod(theta_deserialize)
+
+    def merge(self, a, b):
+        if a[2] != b[2]:
+            raise InvalidThetaError(f"cannot merge theta sketches of k {a[2]} and {b[2]}")
+        return (*theta_merge(a[:2], b[:2], a[2]), a[2])
+
 
 def theta_partial_sketches(
     df: DataFrame, keys: list[str], value_col: str, k: int = 4096
 ) -> DataFrame:
-    """Per-partition (optionally per-group) theta sketches via
-    ``mapInArrow`` — values hashed straight from Arrow buffers with the
-    repo's murmur64a, shuffle carries ≤(20 + 8k)-byte sketches."""
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructField, StructType
-
-    from ..functions.sketch import _arrow_group_codes, _arrow_to_buffers
-
-    key_fields = [df.schema[kk] for kk in keys]
-    out_schema = StructType(list(key_fields) + [StructField("theta", BinaryType(), False)])
-    arrow_schema = to_arrow_schema(out_schema)
-    empty = np.empty(0, dtype=np.uint64)
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict = {}  # key tuple -> [entries, theta]
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            varr = rb.column(rb.schema.get_field_index(value_col))
-            data, offsets, valid = _arrow_to_buffers(varr)
-            hashes = (
-                kernel.murmur64a(data, offsets) if len(offsets) > 1 else np.empty(0, np.uint64)
-            )
-            if keys:
-                gcodes, uniq_rows = _arrow_group_codes(rb, keys)
-            else:
-                gcodes, uniq_rows = np.zeros(rb.num_rows, dtype=np.int64), [()]
-            for row in uniq_rows:
-                if row not in acc:
-                    acc[row] = [empty, _THETA_ONE]
-            codes = gcodes[valid] if valid is not None else gcodes
-            if len(hashes) == 0:
-                continue
-            order = np.argsort(codes, kind="stable")
-            sc, sh = codes[order], hashes[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sc)]))
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                row = uniq_rows[sc[s]]
-                st = acc[row]
-                st[0], st[1] = theta_fold(st[0], st[1], sh[s:e], k)
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {kk: [r[ki] for r in rows] for ki, kk in enumerate(keys)}
-        out["theta"] = [theta_serialize(acc[r][0], acc[r][1], k) for r in rows]
-        yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-
-    return df.select(*keys, value_col).mapInArrow(fold, schema=out_schema)
+    return partial_sketches(df, keys, value_col, ThetaFamily(k))
 
 
 def make_theta_merge_agg():
-    @pandas_udf(BinaryType())
-    def theta_merge_agg(blobs: pd.Series) -> bytes:
-        acc = None
-        kk = None
-        for blob in blobs:
-            if blob is None:
-                continue
-            entries, theta, k = theta_deserialize(bytes(blob))
-            if acc is None:
-                acc, kk = (entries, theta), k
-            else:
-                if k != kk:
-                    raise InvalidThetaError(f"cannot merge theta sketches of k {kk} and {k}")
-                acc = theta_merge(acc, (entries, theta), kk)
-        if acc is None:
-            return theta_serialize(np.empty(0, np.uint64), _THETA_ONE, 4096)
-        return theta_serialize(acc[0], acc[1], kk)
-
-    return theta_merge_agg
+    return merge_agg(ThetaFamily())
 
 
 def theta_sketch(df: DataFrame, keys: list[str], value_col: str, k: int = 4096) -> DataFrame:
     """keys... + merged ``theta`` sketch per group."""
-    partials = theta_partial_sketches(df, keys, value_col, k)
-    merge = make_theta_merge_agg()
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("theta")).alias("theta"))
-    return partials.agg(merge(F.col("theta")).alias("theta"))
+    return sketch(df, keys, value_col, ThetaFamily(k))
 
 
 @pandas_udf(DoubleType())
@@ -296,6 +257,9 @@ def _binary_op(op):
     def fn(a: pd.Series, b: pd.Series) -> pd.Series:
         out = []
         for x, y in zip(a, b):
+            if x is None or y is None:
+                out.append(None)
+                continue
             ea, ta, ka = theta_deserialize(bytes(x))
             eb, tb, kb = theta_deserialize(bytes(y))
             if ka != kb:

@@ -22,6 +22,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -34,7 +35,7 @@ from pyspark.sql.types import (
 )
 
 from .. import codec, kernel
-from ..functions.sketch import _batch_idx_rho, hll_partial_sketches, make_hll_merge_agg
+from ..functions.sketch import _arrow_idx_rho, hll_partial_sketches, make_hll_merge_agg
 from ..kernel import HLL_P_DEFAULT
 
 
@@ -85,11 +86,7 @@ def foreach_batch_summary_sink(
                 return  # retry of an already-applied epoch: no-op
             old = spark.read.parquet(os.path.join(table_dir, current))
             new = new.unionByName(old)
-        merged = (
-            new.groupBy(*keys).agg(merge(F.col(sketch_col)).alias(sketch_col))
-            if keys
-            else new.agg(merge(F.col(sketch_col)).alias(sketch_col))
-        )
+        merged = new.groupBy(*keys).agg(merge(F.col(sketch_col)).alias(sketch_col))
         snap = f"snap-{epoch_id}"
         merged.write.mode("overwrite").parquet(os.path.join(table_dir, snap))
         tmp = pointer + ".tmp"
@@ -309,9 +306,8 @@ def stateful_sketch_counts(
         else:
             regs, rows = kernel.empty_registers(p), 0
         for pdf in pdfs:
-            idx, rho, _ = _batch_idx_rho(pdf[value_col], p)
-            if len(idx):
-                kernel.update_registers(regs, idx, rho)
+            idx, rho, _ = _arrow_idx_rho(pa.array(pdf[value_col], from_pandas=True), p)
+            kernel.update_registers(regs, idx, rho)
             rows += len(pdf)
         state.update((regs.tobytes(), rows))
         yield pd.DataFrame(

@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +23,23 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def assert_no_job(spark):
+    """``with assert_no_job():`` fails if the block starts a Spark job —
+    for guards that must reject bad arguments on the driver."""
+
+    @contextlib.contextmanager
+    def check():
+        sc = spark.sparkContext
+        group = f"no-job-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "must start no job")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    return check

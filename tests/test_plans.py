@@ -301,3 +301,19 @@ def test_ivf_ensure_index_adhoc_for_memory_corpus(spark, tmp_path_factory):
     ids1 = {r["id"] for r in spark.read.parquet(p1).collect()}
     ids2 = {r["id"] for r in spark.read.parquet(p2).collect()}
     assert ids1 == set(range(64)) and ids2 == {1000 + i for i in range(64)}
+
+
+def test_minhash_bands_must_divide_num_hashes(spark, assert_no_job):
+    """The banding guard rejects a bad split on the driver, before any
+    job, in both entry points."""
+    from phphll_spark.operators import dedup_minhash, minhash_candidate_pairs, release_cached
+
+    docs = spark.createDataFrame([(1, "some text here")], "doc_id long, text string")
+    try:
+        with assert_no_job():
+            with pytest.raises(ValueError, match="must divide"):
+                minhash_candidate_pairs(docs, "doc_id", "text", num_hashes=10, bands=3)
+            with pytest.raises(ValueError, match="must divide"):
+                dedup_minhash(docs, "doc_id", "text", num_hashes=10, bands=3)
+    finally:
+        release_cached(spark)

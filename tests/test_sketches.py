@@ -6,7 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from phphll_spark import kernel
-from phphll_spark.sketches import bloom_sketch, cms_sketch
+from phphll_spark.functions import hll_sketch
+from phphll_spark.sketches import bloom_sketch, cms_sketch, kll_sketch, mg_sketch, tdigest_sketch, theta_sketch
 from phphll_spark.sketches.bloom import (
     InvalidBloomError,
     bloom_contains,
@@ -477,3 +478,65 @@ def test_theta_codec_roundtrip_and_validation():
         theta_deserialize(blob[:-3])  # truncated payload
     with pytest.raises(InvalidThetaError):
         theta_deserialize(b"")
+
+
+# ---------------------------------------------------------------------------
+# Rules shared by every family: NULL merges, driver-side guards
+# ---------------------------------------------------------------------------
+
+# one sketch per registered merge aggregate, with non-default parameters
+_NON_DEFAULT_SKETCH = {
+    "hll_merge_agg": lambda df: hll_sketch(df, [], "item"),  # the aggregate validates p
+    "cms_merge_agg": lambda df: cms_sketch(df, [], "item", 4, 512),
+    # 65536 bits, not the 8192 of empty_bloom()'s default
+    "bloom_merge_agg": lambda df: bloom_sketch(df, [], "item"),
+    "kll_merge_agg": lambda df: kll_sketch(df, [], "x", 64),
+    "tdigest_merge_agg": lambda df: tdigest_sketch(df, [], "x", 64),
+    "theta_merge_agg": lambda df: theta_sketch(df, [], "item", 1024),
+    "mg_merge_agg": lambda df: mg_sketch(df, [], "item", 32),
+}
+
+
+@pytest.mark.parametrize("agg", list(_NON_DEFAULT_SKETCH))
+def test_merge_agg_all_null_group_merges_to_null(spark, agg):
+    """Every registered merge aggregate merges an all-NULL group to NULL,
+    so re-merging that result with a partial of non-default parameters
+    gives back the partial unchanged."""
+    from phphll_spark.functions import register_sql_functions
+    from phphll_spark.sketches import register_sketch_sql_functions
+
+    register_sql_functions(spark)
+    register_sketch_sql_functions(spark)
+    src = spark.createDataFrame([(f"u{i % 37}", float(i)) for i in range(300)], "item string, x double")
+    blob = bytes(_NON_DEFAULT_SKETCH[agg](src).collect()[0][0])
+    parts = spark.createDataFrame([("none", None), ("none", None), ("real", blob)], "g string, s binary")
+    parts.createOrReplaceTempView("merge_null_parts")
+    again = spark.sql(
+        f"SELECT {agg}(s) AS s FROM (SELECT {agg}(s) AS s FROM merge_null_parts WHERE g = 'none' "
+        "UNION ALL SELECT s FROM merge_null_parts WHERE g = 'real')"
+    ).collect()[0]["s"]
+    assert bytes(again) == blob
+    merged = {r["g"]: r["s"] for r in spark.sql(f"SELECT g, {agg}(s) AS s FROM merge_null_parts GROUP BY g").collect()}
+    assert merged["none"] is None
+
+
+def test_theta_set_ops_null_side_is_null(spark):
+    from phphll_spark.sketches import theta_a_not_b, theta_intersect, theta_union_pair
+
+    src = spark.createDataFrame([(f"u{i}",) for i in range(50)], "item string")
+    blob = bytes(theta_sketch(src, [], "item", 64).collect()[0]["theta"])
+    pairs = spark.createDataFrame([(blob, None), (None, blob), (None, None), (blob, blob)], "a binary, b binary")
+    for op in (theta_intersect, theta_a_not_b, theta_union_pair):
+        got = [r["r"] for r in pairs.select(op("a", "b").alias("r")).collect()]
+        assert got[:3] == [None, None, None], op
+        assert got[3] is not None, op
+
+
+def test_bloom_bad_m_bits_rejected_on_driver(spark, assert_no_job):
+    from phphll_spark.sketches import bloom_partial_sketches
+
+    with pytest.raises(ValueError, match="multiple of 64"):
+        empty_bloom(100)
+    df = spark.createDataFrame([("g", "v")], "g string, v string")
+    with assert_no_job(), pytest.raises(ValueError, match="multiple of 64"):
+        bloom_partial_sketches(df, ["g"], "v", m_bits=100)

@@ -233,3 +233,11 @@ def test_partial_sketches_multi_matches_separate_folds(spark):
     assert row["ea"] == ea  # NULL-skipping fused fold == separate folds
     assert row["eb"] == eb
     assert row["nf"] == 5_000
+
+
+def test_partial_sketches_multi_rejects_theta_col_outside_value_cols(spark, assert_no_job):
+    from phphll_spark.functions.sketch import hll_partial_sketches_multi
+
+    df = spark.createDataFrame([("a", "b")], "a string, b string")
+    with assert_no_job(), pytest.raises(ValueError, match="theta_cols"):
+        hll_partial_sketches_multi(df, ["a"], theta_cols=("b",))
