@@ -115,6 +115,19 @@ def _segments(codes: np.ndarray) -> Iterator[tuple[int, np.ndarray]]:
         yield int(sc[s]), order[s:e]
 
 
+def point_lookups(blobs: pa.Array, items: pa.Array) -> Iterator[tuple[bytes, np.ndarray, np.ndarray, np.ndarray]]:
+    """(sketch blob, row indices, item data, item offsets) for each distinct
+    sketch in a batch of a scalar lookup UDF, over the rows where neither
+    the sketch nor the item is NULL. Items go through ``_arrow_to_buffers``,
+    so a lookup hashes exactly the bytes the fold hashed for that value."""
+    rows = np.flatnonzero(np.asarray(pc.and_(blobs.is_valid(), items.is_valid())))
+    sketches = blobs.take(rows).dictionary_encode()
+    codes = sketches.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    for code, sel in _segments(codes):
+        data, offsets, _ = _arrow_to_buffers(items.take(rows[sel]))
+        yield sketches.dictionary[code].as_py(), rows[sel], data, offsets
+
+
 @dataclass(frozen=True)
 class ObjectFamily:
     """The family of a numeric sketch class with the KLL / t-digest

@@ -22,6 +22,7 @@ storage formats only.
 from __future__ import annotations
 
 import math
+from typing import Sequence
 
 import numpy as np
 
@@ -51,7 +52,7 @@ def empty_registers(p: int = HLL_P_DEFAULT) -> np.ndarray:
 
 
 def murmur64a_windows(
-    buf: np.ndarray, starts: np.ndarray, lens: np.ndarray, seed: int = MURMUR_SEED
+    buf: np.ndarray, starts: np.ndarray, lens: np.ndarray, seed: int | Sequence[int] = MURMUR_SEED
 ) -> np.ndarray:
     """Vectorized MurmurHash64A over N byte windows of one shared buffer.
 
@@ -61,10 +62,15 @@ def murmur64a_windows(
     exactly the reference's ``k = *((uint64_t*)data)`` on LE hosts
     (hyperloglog.c:398), with no padding/scatter step. Bit-exact vs the
     reference C implementation (verified in tests/test_kernel.py).
+
+    ``seed`` may be a sequence of seeds: the result is then one row per
+    seed, shape ``(len(seed), N)``. Each chunk is gathered and mixed once
+    and folded into every seed's state (``h[..., i]`` indexes both shapes).
     """
+    seeds = np.asarray(seed, dtype=np.uint64)
     n = len(starts)
     if n == 0:
-        return np.empty(0, dtype=np.uint64)
+        return np.empty(seeds.shape + (0,), dtype=np.uint64)
     # pad by 8 zero bytes so u64/tail gathers never read out of bounds
     padded = np.empty(len(buf) + 8, dtype=np.uint8)
     padded[: len(buf)] = buf
@@ -74,7 +80,7 @@ def murmur64a_windows(
     starts = starts.astype(np.int64, copy=False)
     lens = lens.astype(np.int64, copy=False)
     ulens = lens.astype(np.uint64)
-    h = np.uint64(seed) ^ (ulens * _M64)
+    h = seeds[..., None] ^ (ulens * _M64)
 
     full_chunks = lens >> 3  # number of whole 8-byte words per window
     min_chunks = int(full_chunks.min())
@@ -97,7 +103,7 @@ def murmur64a_windows(
         # chunk touches only the still-active suffix — no masks, no where
         order = np.argsort(full_chunks, kind="stable")
         fc_s = full_chunks[order]
-        h_s = h[order]
+        h_s = h[..., order]
         pos_s = pos[order]
         for c in range(min_chunks, max_chunks):
             a0 = np.searchsorted(fc_s, c, side="right")
@@ -105,11 +111,11 @@ def murmur64a_windows(
             k *= _M64
             k ^= k >> _R47
             k *= _M64
-            h_s[a0:] ^= k
-            h_s[a0:] *= _M64
+            h_s[..., a0:] ^= k
+            h_s[..., a0:] *= _M64
             pos_s[a0:] += 8
         h = np.empty_like(h_s)
-        h[order] = h_s
+        h[..., order] = h_s
         pos = np.empty_like(pos_s)
         pos[order] = pos_s
 
@@ -129,9 +135,10 @@ def murmur64a_windows(
     return h
 
 
-def murmur64a(data: np.ndarray, offsets: np.ndarray, seed: int = MURMUR_SEED) -> np.ndarray:
+def murmur64a(data: np.ndarray, offsets: np.ndarray, seed: int | Sequence[int] = MURMUR_SEED) -> np.ndarray:
     """Vectorized MurmurHash64A over N byte strings (Arrow buffer layout:
-    concatenated uint8 payload + N+1 offsets)."""
+    concatenated uint8 payload + N+1 offsets); a sequence of seeds gives
+    one row of hashes per seed, as in :func:`murmur64a_windows`."""
     starts = offsets[:-1]
     lens = offsets[1:] - starts
     return murmur64a_windows(data, starts, lens, seed)

@@ -16,15 +16,14 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf
 from pyspark.sql.types import BooleanType
 
 from .. import kernel
-from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, sketch
+from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, point_lookups, sketch
 
 MAGIC = b"BLMK"
 _SEED1 = 0x2545F491
@@ -51,8 +50,8 @@ def empty_bloom(m_bits: int = 8192) -> np.ndarray:
 
 def _bit_positions(data: np.ndarray, offsets: np.ndarray, m_bits: int, k: int) -> np.ndarray:
     """(n_items, k) bit positions via double hashing."""
-    h1 = kernel.murmur64a(data, offsets, seed=_SEED1)
-    h2 = kernel.murmur64a(data, offsets, seed=_SEED2) | np.uint64(1)  # odd
+    h1, h2 = kernel.murmur64a(data, offsets, seed=(_SEED1, _SEED2))
+    h2 |= np.uint64(1)  # odd
     i = np.arange(k, dtype=np.uint64)[None, :]
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
 
@@ -142,13 +141,12 @@ def bloom_sketch(df: DataFrame, keys: list[str], value_col: str, m_bits: int = 6
     return sketch(df, keys, value_col, BloomFamily(m_bits, k))
 
 
-@pandas_udf(BooleanType())
-def bloom_might_contain(blobs: pd.Series, items: pd.Series) -> pd.Series:
+@arrow_udf(BooleanType())
+def bloom_might_contain(blobs: pa.Array, items: pa.Array) -> pa.Array:
+    """Per-row membership test of `item` in `bloom` (scalar UDF); False
+    where either is NULL."""
     out = np.zeros(len(blobs), dtype=bool)
-    for i, (blob, item) in enumerate(zip(blobs, items)):
-        if blob is None or item is None:
-            continue
-        words, k = bloom_deserialize(bytes(blob))
-        data, offsets = kernel.bytes_to_buffers([str(item).encode()])
-        out[i] = bool(bloom_contains(words, data, offsets, k)[0])
-    return pd.Series(out)
+    for blob, rows, data, offsets in point_lookups(blobs, items):
+        words, k = bloom_deserialize(blob)
+        out[rows] = bloom_contains(words, data, offsets, k)
+    return pa.array(out)

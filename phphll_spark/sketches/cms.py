@@ -20,14 +20,14 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import LongType
 
 from .. import kernel
-from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, sketch
+from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, point_lookups, sketch
 
 MAGIC = b"CMSK"
-# independent row hashes: one murmur per row-seed (seed derived from base)
+# independent row hashes: one murmur seed per row (derived from base)
 _ROW_SEED_BASE = 0x58F0D321
 
 
@@ -40,14 +40,9 @@ def empty_cms(depth: int = 4, width: int = 2048) -> np.ndarray:
 
 
 def _row_columns(data: np.ndarray, offsets: np.ndarray, depth: int, width: int) -> np.ndarray:
-    """(depth, n_items) counter columns: one murmur pass per sketch row."""
-    w = np.uint64(width)
-    return np.stack(
-        [
-            (kernel.murmur64a(data, offsets, seed=(_ROW_SEED_BASE + row) & 0xFFFFFFFF) % w).astype(np.int64)
-            for row in range(depth)
-        ]
-    )
+    """(depth, n_items) counter columns: one murmur pass, one seed per sketch row."""
+    seeds = [(_ROW_SEED_BASE + row) & 0xFFFFFFFF for row in range(depth)]
+    return (kernel.murmur64a(data, offsets, seed=seeds) % np.uint64(width)).astype(np.int64)
 
 
 def cms_update(cms: np.ndarray, data: np.ndarray, offsets: np.ndarray) -> None:
@@ -138,14 +133,11 @@ def cms_total(blobs: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@pandas_udf(LongType())
-def cms_point_estimate(blobs: pd.Series, items: pd.Series) -> pd.Series:
-    """Per-row frequency estimate of `item` in `cms` (scalar UDF)."""
+@arrow_udf(LongType())
+def cms_point_estimate(blobs: pa.Array, items: pa.Array) -> pa.Array:
+    """Per-row frequency estimate of `item` in `cms` (scalar UDF); 0 where
+    either is NULL."""
     out = np.zeros(len(blobs), dtype=np.int64)
-    for i, (blob, item) in enumerate(zip(blobs, items)):
-        if blob is None or item is None:
-            continue
-        cms = cms_deserialize(bytes(blob))
-        data, offsets = kernel.bytes_to_buffers([str(item).encode()])
-        out[i] = int(cms_query(cms, data, offsets)[0])
-    return pd.Series(out)
+    for blob, rows, data, offsets in point_lookups(blobs, items):
+        out[rows] = cms_query(cms_deserialize(blob), data, offsets)
+    return pa.array(out)

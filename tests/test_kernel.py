@@ -71,6 +71,35 @@ def test_murmur_mixed_length_batch():
     assert [int(x) for x in got] == want
 
 
+@pytest.mark.parametrize(
+    "lengths",
+    [
+        [0],
+        [0, 0, 0],
+        [1, 2, 3, 4, 5, 6, 7],
+        [8],
+        [8, 16, 24, 64],
+        [0, 1, 7, 8, 9, 15, 16, 17, 40, 3, 0, 64],
+    ],
+    ids=["empty", "all-empty", "1-7", "8", "multiples-of-8", "mixed"],
+)
+def test_murmur_seed_sequence_matches_per_seed_calls(lengths):
+    """One fused pass over several seeds is bit-identical to one call per
+    seed; an int seed keeps the 1-D shape."""
+    rng = np.random.default_rng(len(lengths))
+    items = [bytes(rng.integers(0, 256, size=n, dtype=np.uint8)) for n in lengths]
+    data, offsets = kernel.bytes_to_buffers(items)
+    seeds = [0x58F0D321, 0x58F0D322, kernel.MURMUR_SEED, 0]
+    fused = kernel.murmur64a(data, offsets, seed=seeds)
+    assert fused.shape == (len(seeds), len(items)) and fused.dtype == np.uint64
+    for row, seed in zip(fused, seeds):
+        single = kernel.murmur64a(data, offsets, seed=seed)
+        assert single.shape == (len(items),)
+        np.testing.assert_array_equal(row, single)
+        assert [int(x) for x in single] == [murmur64a_scalar(it, seed) for it in items]
+    assert kernel.murmur64a(*kernel.bytes_to_buffers([]), seed=seeds).shape == (len(seeds), 0)
+
+
 def test_murmur_against_compiled_reference_if_gcc():
     """Optional C oracle: compile MurmurHash64A out-of-tree and diff."""
     src = r"""

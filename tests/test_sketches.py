@@ -168,6 +168,37 @@ def test_bloom_distributed_matches_serial(spark):
     assert got == [True, False, False]
 
 
+@pytest.mark.parametrize(
+    "dtype, values",
+    [
+        ("string", ["a", "b", "b"]),
+        ("long", [1, 2, 2]),
+        ("double", [1.5, 2.0, 2.0]),
+        ("boolean", [True, False, False]),
+        ("binary", [b"ab", b"c", b"c"]),
+    ],
+    ids=["string", "long", "double", "boolean", "binary"],
+)
+def test_point_lookups_hash_what_the_fold_hashed(spark, dtype, values):
+    """A Bloom lookup of a folded item is never a miss and a CMS estimate
+    never undercounts, whatever the item type; a NULL item finds nothing."""
+    df = spark.createDataFrame([(v,) for v in values] + [(None,)], f"item {dtype}")
+    bloom = bytes(bloom_sketch(df, [], "item").collect()[0]["bloom"])
+    cms = bytes(cms_sketch(df, [], "item").collect()[0]["cms"])
+    got = df.select(
+        "item",
+        bloom_might_contain(F.lit(bloom), "item").alias("hit"),
+        cms_point_estimate(F.lit(cms), "item").alias("est"),
+    ).collect()
+    assert len(got) == len(values) + 1
+    for r in got:
+        if r["item"] is None:
+            assert (r["hit"], r["est"]) == (False, 0)
+        else:
+            item = bytes(r["item"]) if dtype == "binary" else r["item"]
+            assert r["hit"] and r["est"] >= values.count(item), (item, r["hit"], r["est"])
+
+
 def test_bloom_partition_invariance(spark):
     rows = [("g", f"v{i}") for i in range(500)]
     df = spark.createDataFrame(rows, "grp string, item string")
