@@ -955,10 +955,10 @@ def q_topk_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # (lsh_bucket_stats was dropped as a driver query in r3 — its machinery,
-# sign_lsh_buckets, is fully exercised by embedding_near_dup_pairs'
-# multi-table variant and tests/test_pipeline_ops.py; the driver record
-# caps at 50 rows and every remaining entry must land in it, VERDICT r02
-# #1.)
+# sign_lsh_multitable, is fully exercised by embedding_near_dup_pairs
+# (the embedding_near_dup_blocked blocker) and tests/test_pipeline_ops.py;
+# the driver record caps at 50 rows and every remaining entry must land
+# in it, VERDICT r02 #1.)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """Approximate nearest neighbor search over an embedding column.
 
-Two paths:
+Top-k search, one output contract (query_id, neighbor_id, cosine_sim,
+rank) for every path:
 
 - ``cosine_topk_bruteforce``: exact top-k by cosine, scored with native
   higher-order functions (zip_with + aggregate — JVM, codegen) against a
@@ -10,22 +11,103 @@ Two paths:
   single numpy matmul (batch x dim @ dim x q), and only each batch's local
   top-k survive, so the shuffle carries O(partitions * q * k) rows into the
   final global top-k — never the corpus.
-- ``sign_lsh_buckets``: random-hyperplane LSH bucketing for sublinear
-  candidate generation / embedding-dedup blocking.
+- ``ivf_topk`` / ``ivf_topk_indexed``: the same scorer restricted to each
+  query's ``n_probe`` nearest coarse centroids (``kmeans_centroids``).
+
+Also: ``cosine_all_pairs_blocked`` (exact all-pairs by blocked GEMM) and
+``sign_lsh_multitable`` (random-hyperplane LSH tables, the blocker of
+``dedup.embedding_near_dup_blocked``). Every Python body decodes vectors
+with ``similarity_util.vector_matrix``, straight from Arrow buffers.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
-from .similarity_util import normalize_rows
+from .similarity_util import normalize_rows, vector_matrix
 from ..functions.similarity import cosine
+
+_TOPK_SCHEMA = StructType(
+    [
+        StructField("query_id", LongType(), False),
+        StructField("neighbor_id", LongType(), False),
+        StructField("cosine_sim", DoubleType(), False),
+    ]
+)
+
+
+def _ids(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    return np.asarray(col.to_numpy(), dtype=np.int64)
+
+
+def _queries(query_vectors: dict[int, list[float]]) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted query ids, their L2-normalized vectors as a matrix)."""
+    qids = np.array(sorted(query_vectors), dtype=np.int64)
+    return qids, normalize_rows(np.array([query_vectors[int(i)] for i in qids], dtype=np.float64))
+
+
+def _probe_mask(Q: np.ndarray, C: np.ndarray, n_probe: int) -> np.ndarray:
+    """mask[c, q]: centroid c is among query q's ``n_probe`` nearest."""
+    probes = np.argsort(-(Q @ C.T), axis=1)[:, :n_probe]  # (q, n_probe)
+    mask = np.zeros((C.shape[0], len(Q)), dtype=bool)
+    mask[probes, np.arange(len(Q))[:, None]] = True
+    return mask
+
+
+def _topk(
+    rows: DataFrame,
+    qids: np.ndarray,
+    Q: np.ndarray,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    probe_mask: np.ndarray,
+    assign: Callable[[pa.RecordBatch, np.ndarray], np.ndarray],
+) -> DataFrame:
+    """The one top-k scorer: numpy matmul per Arrow batch against the
+    broadcast query matrix, local top-k per batch, global top-k at the
+    end. A corpus row scores only the queries whose probe lists hold its
+    centroid ``assign(batch, X)``; elsewhere it scores -2.0 (below any
+    cosine) and never leaves the batch."""
+    arrow_schema = to_arrow_schema(_TOPK_SCHEMA)
+
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            ids = _ids(b.column(id_col))
+            X = normalize_rows(vector_matrix(b.column(vec_col), Q.shape[1]))
+            sims = X @ Q.T  # (batch, q)
+            sims[~probe_mask[assign(b, X)]] = -2.0  # outside probe lists
+            kk = min(k, len(ids))
+            # local top-k per query via argpartition (O(batch) not O(batch log batch))
+            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (k, q)
+            rows_s = np.take_along_axis(sims, part, axis=0).T.reshape(-1)
+            keep = rows_s > -2.0
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "query_id": np.repeat(qids, kk)[keep],
+                    "neighbor_id": ids[part.T.reshape(-1)][keep],
+                    "cosine_sim": np.round(rows_s[keep], 6),
+                },
+                schema=arrow_schema,
+            )
+
+    return _ranked(rows.mapInArrow(score, schema=_TOPK_SCHEMA), k)
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """The global top-k per query, ties broken by the smaller neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def cosine_topk_bruteforce(
@@ -49,8 +131,7 @@ def cosine_topk_bruteforce(
         "neighbor_id",
         F.round(cosine(F.col(vec_col), F.col("qvec")), 6).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _ranked(scored, k)
 
 
 def cosine_topk_blocked(
@@ -67,35 +148,14 @@ def cosine_topk_blocked(
     ``query_vectors``: {query_id: vector} — small enough to broadcast
     (closure-captured; at real scale use sc.broadcast explicitly).
     Output: (query_id, neighbor_id, cosine_sim, rank) — identical contract
-    to the bruteforce path (validated in tests)."""
-    qids = np.array(sorted(query_vectors), dtype=np.int64)
-    Q = normalize_rows(np.array([query_vectors[int(i)] for i in qids], dtype=np.float64))
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine_sim", DoubleType(), False),
-        ]
+    to the bruteforce path (validated in tests). The IVF scorer with one
+    list that every query probes."""
+    qids, Q = _queries(query_vectors)
+    everyone = np.ones((1, len(qids)), dtype=bool)
+    return _topk(
+        corpus.select(id_col, vec_col), qids, Q, id_col, vec_col, k,
+        everyone, lambda b, X: np.zeros(len(X), dtype=np.intp),
     )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            X = normalize_rows(np.array(list(pdf[vec_col]), dtype=np.float64))
-            sims = X @ Q.T  # (batch, q)
-            kk = min(k, len(ids))
-            # local top-k per query via argpartition (O(batch) not O(batch log batch))
-            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (k, q)
-            rows_q = np.repeat(qids, kk)
-            rows_n = ids[part.T.reshape(-1)]
-            rows_s = np.take_along_axis(sims, part, axis=0).T.reshape(-1)
-            yield pd.DataFrame({"query_id": rows_q, "neighbor_id": rows_n, "cosine_sim": np.round(rows_s, 6)})
-
-    local = corpus.select(id_col, vec_col).mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def kmeans_centroids(
@@ -146,49 +206,12 @@ def ivf_topk(
     mask is applied in-flight so the whole operator stays one narrow
     pass + a tiny top-k shuffle, same contract as cosine_topk_blocked.
     Output: (query_id, neighbor_id, cosine_sim, rank)."""
-    qids = np.array(sorted(query_vectors), dtype=np.int64)
-    Q = normalize_rows(np.array([query_vectors[int(i)] for i in qids], dtype=np.float64))
+    qids, Q = _queries(query_vectors)
     C = normalize_rows(np.asarray(centroids, dtype=np.float64))
-    # probe_mask[c, q] = centroid c is among query q's n_probe nearest
-    qc = Q @ C.T  # (q, centroids)
-    probes = np.argsort(-qc, axis=1)[:, :n_probe]
-    probe_mask = np.zeros((C.shape[0], len(qids)), dtype=bool)
-    for qi in range(len(qids)):
-        probe_mask[probes[qi], qi] = True
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine_sim", DoubleType(), False),
-        ]
+    return _topk(
+        corpus.select(id_col, vec_col), qids, Q, id_col, vec_col, k,
+        _probe_mask(Q, C, n_probe), lambda b, X: np.argmax(X @ C.T, axis=1),
     )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            X = normalize_rows(np.array(list(pdf[vec_col]), dtype=np.float64))
-            assign = np.argmax(X @ C.T, axis=1)
-            sims = X @ Q.T  # (batch, q)
-            sims[~probe_mask[assign]] = -2.0  # outside probe lists
-            kk = min(k, len(ids))
-            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-            rows_q = np.repeat(qids, kk)
-            rows_n = ids[part.T.reshape(-1)]
-            rows_s = np.take_along_axis(sims, part, axis=0).T.reshape(-1)
-            keep = rows_s > -2.0
-            yield pd.DataFrame(
-                {
-                    "query_id": rows_q[keep],
-                    "neighbor_id": rows_n[keep],
-                    "cosine_sim": np.round(rows_s[keep], 6),
-                }
-            )
-
-    local = corpus.select(id_col, vec_col).mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def cosine_all_pairs_blocked(
@@ -234,21 +257,23 @@ def cosine_all_pairs_blocked(
             StructField("mat", BinaryType(), False),
         ]
     )
+    packed_arrow = to_arrow_schema(packed_schema)
 
-    def pack(g: pd.DataFrame) -> pd.DataFrame:
-        # applyInPandas: the WHOLE block arrives as one frame, so a block
-        # is always exactly one packed row (a batched mapInPandas would
-        # split >65k-row blocks into sub-rows and double-emit same-block
-        # pairs across sub-row combinations)
-        ids = g[id_col].to_numpy(dtype=np.int64)
-        X = normalize_rows(np.array(list(g[vec_col]), dtype=np.float64))
-        return pd.DataFrame(
+    def pack(t: pa.Table) -> pa.Table:
+        # applyInArrow: the WHOLE block arrives as one table, so a block
+        # is always exactly one packed row (a batched map would split
+        # >65k-row blocks into sub-rows and double-emit same-block pairs
+        # across sub-row combinations)
+        ids = _ids(t.column(id_col))
+        X = normalize_rows(vector_matrix(t.column(vec_col)))
+        return pa.Table.from_pydict(
             {
-                "block": [int(g["block"].iloc[0])],
+                "block": [t.column("block")[0].as_py()],
                 "n": [len(ids)],
                 "ids": [ids.tobytes()],
                 "mat": [X.tobytes()],
-            }
+            },
+            schema=packed_arrow,
         )
 
     from ._cache import register as _register_cache
@@ -260,7 +285,7 @@ def cosine_all_pairs_blocked(
     blocks = _register_cache(
         df.select(F.pmod(F.hash(F.col(id_col)), F.lit(B)).alias("block"), id_col, vec_col)
         .groupBy("block")
-        .applyInPandas(pack, schema=packed_schema)
+        .applyInArrow(pack, schema=packed_schema)
         .persist()
     )
     combos = spark.createDataFrame(
@@ -343,26 +368,28 @@ def sign_lsh_multitable(
             StructField("bucket", LongType(), False),
         ]
     )
+    arrow_schema = to_arrow_schema(schema)
 
-    def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def bucketize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tables = np.arange(num_tables, dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
+            ids = _ids(b.column(id_col))
+            X = vector_matrix(b.column(vec_col), dim)
             signs = (X @ planes) > 0  # (n, T*r)
             codes = signs.reshape(len(ids), num_tables, planes_per_table).astype(np.int64)
             buckets = (codes * weights[None, None, :]).sum(axis=2)  # (n, T)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "id": np.repeat(ids, num_tables),
                     "table": np.tile(tables, len(ids)),
                     "bucket": buckets.reshape(-1),
-                }
+                },
+                schema=arrow_schema,
             )
 
-    return df.select(id_col, vec_col).mapInPandas(bucketize, schema=schema)
+    return df.select(id_col, vec_col).mapInArrow(bucketize, schema=schema)
 
 
 def ivf_assign(
@@ -383,18 +410,20 @@ def ivf_assign(
             StructField("vec", vec_field.dataType, False),
         ]
     )
+    arrow_schema = to_arrow_schema(schema)
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            X = normalize_rows(np.array(list(pdf[vec_col]), dtype=np.float64))
+            X = normalize_rows(vector_matrix(b.column(vec_col), C.shape[1]))
             a = np.argmax(X @ C.T, axis=1).astype(np.int64)
-            yield pd.DataFrame(
-                {"centroid": a, "id": pdf[id_col].to_numpy(dtype=np.int64), "vec": pdf[vec_col]}
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a), pa.array(_ids(b.column(id_col))), b.column(vec_col)],
+                schema=arrow_schema,
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(assign, schema=schema)
+    return corpus.select(id_col, vec_col).mapInArrow(assign, schema=schema)
 
 
 def ivf_build_index(
@@ -500,84 +529,12 @@ def ivf_topk_indexed(
 
     Same output contract as ``ivf_topk`` / ``cosine_topk_blocked``:
     (query_id, neighbor_id, cosine_sim, rank)."""
-    qids = np.array(sorted(query_vectors), dtype=np.int64)
-    Q = normalize_rows(np.array([query_vectors[int(i)] for i in qids], dtype=np.float64))
+    qids, Q = _queries(query_vectors)
     C = normalize_rows(np.asarray(centroids, dtype=np.float64))
-    qc = Q @ C.T
-    probes = np.argsort(-qc, axis=1)[:, :n_probe]  # (q, n_probe)
-    probe_mask = np.zeros((C.shape[0], len(qids)), dtype=bool)
-    for qi in range(len(qids)):
-        probe_mask[probes[qi], qi] = True
-    probe_union = sorted({int(c) for row in probes for c in row})
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine_sim", DoubleType(), False),
-        ]
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            X = normalize_rows(np.array(list(pdf["vec"]), dtype=np.float64))
-            assign = pdf["centroid"].to_numpy(dtype=np.int64)
-            sims = X @ Q.T
-            sims[~probe_mask[assign]] = -2.0
-            kk = min(k, len(ids))
-            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-            rows_q = np.repeat(qids, kk)
-            rows_n = ids[part.T.reshape(-1)]
-            rows_s = np.take_along_axis(sims, part, axis=0).T.reshape(-1)
-            keep = rows_s > -2.0
-            yield pd.DataFrame(
-                {
-                    "query_id": rows_q[keep],
-                    "neighbor_id": rows_n[keep],
-                    "cosine_sim": np.round(rows_s[keep], 6),
-                }
-            )
-
+    mask = _probe_mask(Q, C, n_probe)
+    probe_union = [int(c) for c in np.flatnonzero(mask.any(axis=1))]
     idx = spark.read.parquet(index_path).filter(F.col("centroid").isin(probe_union))
-    local = idx.select("centroid", "id", "vec").mapInPandas(score, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def sign_lsh_buckets(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    num_planes: int = 16,
-    dim: int | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Random-hyperplane (sign) LSH: bucket id = sign-bit pattern of the
-    vector against ``num_planes`` fixed random hyperplanes. Vectors with
-    high cosine land in the same bucket with prob (1 - theta/pi)^planes.
-
-    Output: (id, bucket). Computed per Arrow batch with one matmul.
-
-    Pass ``dim`` explicitly — the fallback runs a driver-side ``.first()``
-    job before the real plan (fine interactively, avoid in pipelines)."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, num_planes))
-    schema = StructType([StructField("id", LongType(), False), StructField("bucket", LongType(), False)])
-
-    def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = (np.uint64(1) << np.arange(num_planes, dtype=np.uint64))
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            signs = (X @ planes) > 0
-            buckets = (signs.astype(np.uint64) * weights[None, :]).sum(axis=1).astype(np.int64)
-            yield pd.DataFrame({"id": ids, "bucket": buckets})
-
-    return df.select(id_col, vec_col).mapInPandas(bucketize, schema=schema)
+    return _topk(
+        idx.select("centroid", "id", "vec"), qids, Q, "id", "vec", k,
+        mask, lambda b, X: b.column("centroid").to_numpy(),
+    )

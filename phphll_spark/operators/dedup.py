@@ -261,42 +261,6 @@ def _pairs_within_group(ids: F.Column) -> F.Column:
     )
 
 
-def _grouped_buckets(
-    rows: DataFrame, bucket_cols: list[str], id_col: str, max_bucket_size: int | None
-) -> DataFrame:
-    """(bucket key → sorted id array) with memory bounded BEFORE
-    collection: when ``max_bucket_size`` is set, per-bucket counts are
-    pre-aggregated (map-side partial combine on the same key, so the
-    count shuffle carries one row per bucket per task) and the oversized
-    buckets — a tiny set by construction — are broadcast anti-joined out
-    of the rows, so a degenerate bucket (a giant identical-content
-    cluster) is dropped before ``collect_list`` ever materializes its id
-    array in an agg buffer (VERDICT r02 #3: the post-collection size
-    filter guarded pair count but not memory). The anti-join is broadcast
-    (map-side), so the bucket rows still reach the collect through ONE
-    shuffle; the rows are persisted by the caller so the narrow signature
-    pass feeding them runs once, not once per aggregate.
-
-    Broadcast size bound: ≤ bands·(n / max_bucket_size) oversized keys —
-    small for any sane corpus (an oversized bucket needs max_bucket_size
-    colliding docs). If a pathological corpus could push that past the
-    broadcast limit, drop the hint and let AQE pick the join side at
-    runtime."""
-    if max_bucket_size is not None:
-        oversized = (
-            rows.groupBy(*bucket_cols)
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select(*bucket_cols)
-        )
-        rows = rows.join(F.broadcast(oversized), bucket_cols, "left_anti")
-    return (
-        rows.groupBy(*bucket_cols)
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -320,11 +284,11 @@ def minhash_candidate_pairs(
     self-join, so nothing needs persisting and the signature pass runs
     exactly once. ``max_bucket_size`` (optional) drops pathological
     buckets (e.g. boilerplate-dominated shingle sets) BEFORE their ids
-    are collected (pre-count + broadcast anti-join — bounded executor
-    memory, not just bounded pair count; the banded rows are persisted so
-    the signature pass still runs once); at web scale run exact dedup
-    first so bucket size tracks true near-dup density (see
-    dedup_minhash)."""
+    are collected (a map-side filter on the oversized keys, see
+    _priced_pairs — bounded executor memory, not just bounded pair count;
+    the banded rows are persisted so the signature pass still runs once);
+    at web scale run exact dedup first so bucket size tracks true
+    near-dup density (see dedup_minhash)."""
     src = _with_min_parallelism(df.select(id_col, text_col))
     sigs = with_minhash(src, text_col, num_hashes=num_hashes, shingle_k=shingle_k, seed=seed)
     pairs, _ = _candidate_pairs_from_sigs(
@@ -373,20 +337,21 @@ def _priced_pairs(
     max_bucket_size: int | None,
 ) -> tuple[DataFrame, int]:
     """Bucketed in-group pair expansion with a PRICED candidate set,
-    shared by the MinHash (band, bucket) and SimHash (chunk_idx, chunk)
-    blockers. ONE lightweight job over ``rows`` (caller persists them or
-    derives them narrowly from a persisted frame) prices the candidates
-    AND collects the oversized-bucket keys together: sum of
-    C(bucket, 2) over the buckets within the cap (the rest are dropped)
-    is an upper bound on in-bucket pairs pre-distinct (so ≥ the distinct
-    pair count), which callers use to
-    pick broadcast-vs-shuffle verification plans WITHOUT a separate
-    count job on the pair frame; the > cap keys (≤ buckets·n/cap by
+    shared by the MinHash (band, bucket), SimHash (chunk_idx, chunk) and
+    sign-LSH (table, bucket) blockers. ONE lightweight job over ``rows``
+    (caller persists them or derives them narrowly from a persisted
+    frame) prices the candidates AND collects the oversized-bucket keys
+    together: sum of C(bucket, 2) over the buckets within the cap (the
+    rest are dropped) is an upper bound on in-bucket pairs pre-distinct
+    (so ≥ the distinct pair count), which callers pass to _verify_join
+    to pick its broadcast or shuffle plan WITHOUT a separate count job
+    on the pair frame; the > cap keys (≤ buckets·n/cap by
     construction) come back in the same action as a literal InSet
     filter, so the collect job never re-aggregates bucket sizes (the
     former broadcast anti-join re-derived them in-plan — measured
-    ~0.9 s extra at sf0.1). Key = c0 << 32 | c1-as-uint32 (both 32-bit
-    ints — exact, no collisions)."""
+    ~0.9 s extra at sf0.1). Key = c0 << 32 | c1-as-uint32: exact only
+    while c1 fits in 32 bits (hashes are ints; a sign-LSH bucket has
+    ``planes_per_table`` ≤ 32 bits, checked by its caller)."""
     key = F.shiftleft(F.col(c0).cast("long"), 32) + (
         F.col(c1).cast("long") + F.lit(1 << 32)
     ) % F.lit(1 << 32)
@@ -417,13 +382,53 @@ def _priced_pairs(
         rows = rows.join(
             F.broadcast(over_df), key == F.col("_over_key"), "left_anti"
         )
-    grouped = _grouped_buckets(rows, [c0, c1], id_col, None)
     pairs = (
-        grouped.select(F.explode(_pairs_within_group(F.col("ids"))).alias("p"))
+        rows.groupBy(c0, c1)
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .filter(F.size("ids") >= 2)
+        .select(F.explode(_pairs_within_group(F.col("ids"))).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
     )
     return pairs, est_pairs
+
+
+def _verify_join(
+    pairs: DataFrame,
+    est_pairs: int,
+    limit: int,
+    values: DataFrame,
+    id_col: str,
+    col: str,
+) -> DataFrame:
+    """Attach ``values[col]`` to both sides of every candidate pair:
+    (id_a, id_b, <col>_a, <col>_b). The one verify join of the near-dup
+    blockers; each caller filters on its own measure.
+
+    ``est_pairs`` ≤ ``limit``: the pair frame is the BROADCAST side of
+    both joins, so the corpus-sized ``values`` frame is streamed map-side
+    and never exchanged (VERDICT r03 #3; plan-gated in
+    tests/test_plans.py). Above it (a degenerate/boilerplate corpus
+    without a max_bucket_size cap — measured 235 M in-bucket pairs on a
+    5 M-doc synthetic web corpus) broadcasting the pairs is a guaranteed
+    OOM, so they shuffle-join the values of ONLY the candidate ids: the
+    semi-join narrows the corpus-sized frame before anything wide
+    shuffles. Same output either way."""
+    broadcast = est_pairs <= limit
+    if not broadcast:
+        cand = (
+            pairs.select(F.col("id_a").alias(id_col))
+            .union(pairs.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        values = values.join(cand, id_col, "left_semi")
+    va = values.select(F.col(id_col).alias("id_a"), F.col(col).alias(f"{col}_a"))
+    vb = values.select(F.col(id_col).alias("id_b"), F.col(col).alias(f"{col}_b"))
+    if broadcast:
+        joined = vb.join(F.broadcast(va.join(F.broadcast(pairs), "id_a")), "id_b")
+    else:
+        joined = pairs.join(va, "id_a").join(vb, "id_b")
+    return joined.select("id_a", "id_b", f"{col}_a", f"{col}_b")
 
 
 def _with_min_parallelism(df: DataFrame) -> DataFrame:
@@ -529,12 +534,8 @@ def dedup_minhash(
         .persist()
     )
     # est_pairs (≥ the distinct candidate count, priced by ONE lightweight
-    # job inside _candidate_pairs_from_sigs) picks the prefilter plan.
-    # Boilerplate-heavy corpora produce LSH buckets of thousands of docs
-    # — measured 235 M in-bucket pairs on a 5 M-doc synthetic web corpus
-    # — and broadcasting a pair frame that size (x0.5 KB signatures in
-    # the first join's build side) is a guaranteed driver/executor OOM,
-    # so the broadcast pin must be conditional, not a comment.
+    # job inside _candidate_pairs_from_sigs) picks the prefilter plan:
+    # broadcast or shuffle, see _verify_join
     pairs, n_pairs = _candidate_pairs_from_sigs(
         sigs, id_col, num_hashes=num_hashes, bands=bands, max_bucket_size=max_bucket_size
     )
@@ -543,46 +544,15 @@ def dedup_minhash(
         sigma = math.sqrt(threshold * (1.0 - threshold) / num_hashes)
         k_min = max(0, math.ceil((threshold - sig_prefilter_sigmas * sigma) * num_hashes))
         matches = F.aggregate(
-            F.zip_with("m_a", "m_b", lambda x, y: (x == y).cast("int")),
+            F.zip_with("minhash_a", "minhash_b", lambda x, y: (x == y).cast("int")),
             F.lit(0),
             lambda acc, v: acc + v,
         )
-        sig_a = sigs.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("m_a"))
-        sig_b = sigs.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("m_b"))
-        if n_pairs <= broadcast_pair_limit:
-            # the candidate-pair frame (small after banding) is the
-            # BROADCAST side of both signature joins, so the corpus-sized
-            # persisted signature frame is streamed map-side and never
-            # exchanged (VERDICT r03 #3; plan-gated in tests/test_plans.py)
-            with_a = sig_a.join(F.broadcast(pairs), "id_a")
-            pairs = (
-                sig_b.join(F.broadcast(with_a), "id_b")
-                .filter(matches >= F.lit(int(k_min)))
-                .select("id_a", "id_b")
-            )
-        else:
-            # pair frame too big to broadcast (degenerate/boilerplate
-            # corpus without a max_bucket_size cap): shuffle-join it with
-            # the signatures of ONLY the candidate ids — the semi-join
-            # narrows the corpus-sized signature frame before anything
-            # wide shuffles. Distributed and spill-safe (no broadcast
-            # build of an unbounded frame); for production corpora set
-            # max_bucket_size so the broadcast regime applies instead.
-            cand = (
-                pairs.select(F.col("id_a").alias(id_col))
-                .union(pairs.select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            csigs = sigs.join(cand, id_col, "left_semi")
-            sig_a = csigs.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("m_a"))
-            sig_b = csigs.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("m_b"))
-            pairs = (
-                pairs.join(sig_a, "id_a")
-                .join(sig_b, "id_b")
-                .filter(matches >= F.lit(int(k_min)))
-                .select("id_a", "id_b")
-            )
-    if sig_prefilter_sigmas is not None:  # else already persisted above
+        pairs = (
+            _verify_join(pairs, n_pairs, broadcast_pair_limit, sigs, id_col, "minhash")
+            .filter(matches >= F.lit(int(k_min)))
+            .select("id_a", "id_b")
+        )
         pairs = _register_cache(pairs.persist())
     # shingle ONLY the docs that appear in surviving candidate pairs — at
     # scale (and after the prefilter) that set is orders of magnitude
@@ -704,17 +674,20 @@ def simhash_near_dup_pairs(
     grouping each (chunk_idx, chunk) cell finds all of them with no
     cross product. Candidates expand in-cell via the same native nested
     transform as the MinHash path (one shuffle, no self-join), then
-    verify against the fingerprints with the tiny pair frame broadcast.
+    verify against the fingerprints (_verify_join: the pair frame is
+    broadcast up to ``broadcast_pair_limit`` estimated pairs, shuffled
+    above it; the limit is higher than dedup_minhash's because a build
+    row carries one int64 fingerprint, not a 0.5 KB signature array).
 
     ``max_bucket_size`` (VERDICT r03 #2): a cell's expected size is
     ~n/65536 per chunk value, but a boilerplate-heavy corpus — or any
     cluster sharing one 16-bit fingerprint slice — makes a cell
     quadratic with nothing bounding it. When set, oversized cells are
-    pre-counted and broadcast anti-joined out BEFORE their ids are
-    collected (_grouped_buckets — bounded executor memory AND pair
-    count), exactly like the MinHash and embedding blockers. Run exact
-    dedup first at web scale so cell size tracks true near-dup density
-    rather than copy count."""
+    dropped by a map-side filter on their keys BEFORE their ids are
+    collected (_priced_pairs — bounded executor memory AND pair count),
+    exactly like the MinHash and embedding blockers. Run exact dedup
+    first at web scale so cell size tracks true near-dup density rather
+    than copy count."""
     release_cached(df.sparkSession)
     fp = _register_cache(
         with_simhash(_with_min_parallelism(df.select(id_col, text_col)), text_col, shingle_k=shingle_k)
@@ -730,22 +703,9 @@ def simhash_near_dup_pairs(
     # chunks is a narrow projection of the persisted fingerprints, so the
     # pricing job and the collect both re-derive it cheaply from cache
     pairs, est_pairs = _priced_pairs(chunks, "chunk_idx", "chunk", id_col, max_bucket_size)
-    fa = fp.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
-    fb = fp.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    if est_pairs <= broadcast_pair_limit:
-        # pairs (and pairs+sh_a) stay the broadcast side of both joins:
-        # the corpus-sized fingerprint frame is streamed, never shuffled
-        with_a = fa.join(F.broadcast(pairs), "id_a")
-        joined = fb.join(F.broadcast(with_a), "id_b")
-    else:
-        # candidate set too big to broadcast (same anti-OOM regime as
-        # dedup_minhash; the limit is higher here because the build rows
-        # carry one int64 fingerprint, not a 0.5 KB signature array) —
-        # shuffle joins, fingerprints are 8 B/row so this scales
-        joined = pairs.join(fa, "id_a").join(fb, "id_b")
     return (
-        joined
-        .select("id_a", "id_b", hamming64(F.col("sh_a"), F.col("sh_b")).alias("hamming"))
+        _verify_join(pairs, est_pairs, broadcast_pair_limit, fp, id_col, "simhash")
+        .select("id_a", "id_b", hamming64(F.col("simhash_a"), F.col("simhash_b")).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -779,6 +739,12 @@ def embedding_near_dup_pairs(
     )
 
 
+# est_pairs above which embedding verification shuffles instead of
+# broadcasting the pairs: dedup_minhash's broadcast_pair_limit default,
+# since a 64-float vector row is about the size of its 64-int signature row
+_EMBEDDING_PAIR_LIMIT = 2_000_000
+
+
 def embedding_near_dup_blocked(
     df: DataFrame,
     id_col: str,
@@ -807,42 +773,44 @@ def embedding_near_dup_blocked(
     Validated equal to the quadratic ``embedding_near_dup_pairs`` baseline
     at test scale (tests/test_pipeline_ops.py).
 
+    Same candidate → priced plan → verify path as the MinHash and SimHash
+    blockers: the persisted (table, bucket, id) rows go through
+    _priced_pairs and the pairs through _verify_join, broadcast up to
+    _EMBEDDING_PAIR_LIMIT estimated pairs and shuffled above it.
+
     NB the in-bucket pair expansion materializes C(bucket, 2) structs in
     one row before exploding: a bucket is ~n/2^planes_per_table of the
-    corpus per table, so size ``planes_per_table`` to the threshold (8–16
-    for ≥0.9 cosine) and/or set ``max_bucket_size`` to drop pathological
-    cells — dropped BEFORE their ids are collected (pre-count + broadcast
-    anti-join, see _grouped_buckets), so the guard bounds executor memory,
+    corpus per table, so size ``planes_per_table`` (1..32) to the
+    threshold (8–16 for ≥0.9 cosine) and/or set ``max_bucket_size`` to
+    drop pathological cells — dropped by a map-side filter on their keys
+    BEFORE their ids are collected, so the guard bounds executor memory,
     not just pair count."""
-    import math
-
     from .ann import sign_lsh_multitable
 
+    if not 1 <= planes_per_table <= 32:
+        # a bucket is planes_per_table bits; _priced_pairs keys a cell as
+        # table << 32 | bucket, exact only for buckets of ≤ 32 bits
+        raise ValueError(f"planes_per_table must be in 1..32, got {planes_per_table}")
     if num_tables is None:
         p1 = 1.0 - math.acos(max(min(threshold, 1.0), -1.0)) / math.pi
         per_table = min(p1**planes_per_table, 1.0 - 1e-12)  # threshold=1.0 -> p1=1
         num_tables = max(1, math.ceil(math.log(miss_prob) / math.log(1.0 - per_table)))
         num_tables = min(num_tables, 1024)  # numerical floor above would explode T
-    buckets = sign_lsh_multitable(
-        df, id_col, vec_col, dim=dim, num_tables=num_tables,
-        planes_per_table=planes_per_table, seed=seed,
+    release_cached(df.sparkSession)
+    # the pricing job and the collect both read the bucket rows: persist
+    # so the LSH matmul pass runs once
+    buckets = _register_cache(
+        sign_lsh_multitable(
+            df, id_col, vec_col, dim=dim, num_tables=num_tables,
+            planes_per_table=planes_per_table, seed=seed,
+        ).persist()
     )
-    if max_bucket_size is not None:
-        # count pre-pass + collect both read the bucket rows: persist so
-        # the LSH matmul pass runs once (see _grouped_buckets)
-        buckets = _register_cache(buckets.persist())
-    grouped = _grouped_buckets(buckets, ["table", "bucket"], "id", max_bucket_size)
-    pairs = (
-        grouped.select(F.explode(_pairs_within_group(F.col("ids"))).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
-    v = df.select(F.col(id_col), F.col(vec_col))
-    va = v.withColumnRenamed(id_col, "id_a").withColumnRenamed(vec_col, "vec_a")
-    vb = v.withColumnRenamed(id_col, "id_b").withColumnRenamed(vec_col, "vec_b")
+    pairs, est_pairs = _priced_pairs(buckets, "table", "bucket", "id", max_bucket_size)
     return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", F.round(cosine("vec_a", "vec_b"), 4).alias("cosine_sim"))
+        _verify_join(pairs, est_pairs, _EMBEDDING_PAIR_LIMIT, df, id_col, vec_col)
+        .select(
+            "id_a", "id_b",
+            F.round(cosine(f"{vec_col}_a", f"{vec_col}_b"), 4).alias("cosine_sim"),
+        )
         .filter(F.col("cosine_sim") >= threshold)
     )

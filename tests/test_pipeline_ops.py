@@ -25,11 +25,21 @@ from phphll_spark.operators import (
     make_fake_media_df,
     ngram_jaccard_pairs,
     release_cached,
-    sign_lsh_buckets,
+    sign_lsh_multitable,
     simhash_near_dup_pairs,
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def _simple_plan(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("simple")
+    return buf.getvalue()
 
 
 @pytest.fixture(scope="module")
@@ -269,9 +279,34 @@ def test_embedding_near_dups_and_lsh(spark):
     planted = {(2 * i, 2 * i + 1) for i in range(30)}
     assert len(got & planted) >= 28
     # sign-LSH: planted pairs mostly share buckets
-    buckets = {r["id"]: r["bucket"] for r in sign_lsh_buckets(df, "vec_id", "embedding", num_planes=8).collect()}
+    buckets = {
+        r["id"]: r["bucket"]
+        for r in sign_lsh_multitable(
+            df, "vec_id", "embedding", dim=16, num_tables=1, planes_per_table=8
+        ).collect()
+    }
     same = sum(1 for i in range(30) if buckets[2 * i] == buckets[2 * i + 1])
     assert same >= 20
+
+
+@pytest.mark.parametrize(
+    "vectors, message",
+    [
+        ([[1.0, 0.0, 0.0, 0.0], None], r"ValueError: vector column has 1 NULL vector"),
+        ([[1.0, 0.0, 0.0, 0.0], [1.0, 0.0]], r"ValueError: vector 1 has length 2, expected dim=4"),
+    ],
+    ids=["null_vector", "short_vector"],
+)
+def test_vector_decode_rejects_bad_vectors(spark, vectors, message):
+    """The Arrow vector decode raises instead of reshaping a NULL-skipping
+    or ragged flat buffer into shifted rows: both rows share one batch,
+    and the operator fails rather than returning buckets."""
+    df = spark.createDataFrame(
+        list(enumerate(vectors)), "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    out = sign_lsh_multitable(df, "vec_id", "embedding", dim=4, num_tables=2, planes_per_table=3)
+    with pytest.raises(Exception, match=message):
+        out.collect()
 
 
 def test_cosine_topk_bruteforce_vs_blocked(spark, emb):
@@ -716,8 +751,53 @@ def test_embedding_blocked_bucket_guard(spark):
         emb, "vec_id", "embedding", threshold=0.9, dim=8, num_tables=2,
         max_bucket_size=50,
     )
+    plan = _simple_plan(out)
+    # as for minhash: the drop is a Filter on the (table << 32 | bucket)
+    # key, and no join guards the buckets — the only joins are the two
+    # verify joins on the pair ids
+    assert "shiftleft" in plan and "Filter" in plan, plan
+    joins = [l for l in plan.splitlines() if "Join" in l]
+    assert len(joins) == 2, plan
+    assert all("Inner" in l and ("[id_a#" in l or "[id_b#" in l) for l in joins), plan
     assert out.count() == 0
     release_cached(spark)
+
+
+def test_embedding_blocked_rejects_wide_buckets_on_driver(spark, assert_no_job):
+    """A sign-LSH bucket has planes_per_table bits, and _priced_pairs keys
+    a cell as table << 32 | bucket: past 32 bits two buckets could share
+    a key, so the operator refuses before any job runs."""
+    from phphll_spark.operators import embedding_near_dup_blocked
+
+    emb = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    for bad in (0, 33):
+        with assert_no_job(), pytest.raises(ValueError, match="planes_per_table must be in 1..32"):
+            embedding_near_dup_blocked(
+                emb, "vec_id", "embedding", threshold=0.9, dim=2, planes_per_table=bad
+            )
+
+
+def test_embedding_shuffle_verify_same_pairs(spark, monkeypatch):
+    """The shuffle regime of the embedding verify (est_pairs above the
+    module limit) returns the same (id_a, id_b, cosine_sim) set as the
+    broadcast regime. Forced by setting the limit to 0."""
+    from phphll_spark.operators import dedup as dedup_mod
+
+    emb = spark.read.parquet(SF.replace("sf0.001", "sf0.01") + "/embeddings.parquet")
+
+    def run():
+        df = dedup_mod.embedding_near_dup_blocked(emb, "vec_id", "embedding", threshold=0.5, dim=64)
+        plan = _simple_plan(df)
+        out = {(r["id_a"], r["id_b"], r["cosine_sim"]) for r in df.collect()}
+        release_cached(spark)
+        return out, plan
+
+    broad, broad_plan = run()
+    monkeypatch.setattr(dedup_mod, "_EMBEDDING_PAIR_LIMIT", 0)
+    shuf, shuf_plan = run()
+    # the shuffle regime narrows the vectors to candidate ids first
+    assert "LeftSemi" in shuf_plan and "LeftSemi" not in broad_plan
+    assert broad == shuf and len(shuf) >= 1
 
 
 def test_hashed_shingles_non_ascii_char_parity(spark):
