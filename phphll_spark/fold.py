@@ -6,8 +6,9 @@ partition folds its rows into one partial sketch per group
 shuffle carries only those sketches, never raw elements, and an
 associative merge aggregate combines them. The plumbing of that shape —
 group codes, sort-and-segment, the per-group accumulator, the output
-frame, the merge ``pandas_udf`` and the ``groupBy`` composer — lives here
-once. A new sketch is a family object, not a new fold.
+frame, the partition-wise ``merge`` (and the ``merge_agg`` pandas UDF for
+SQL and streaming) — lives here once. A new sketch is a family object,
+not a new fold.
 
 A family is a small picklable object built from its parameters. It
 supplies:
@@ -39,7 +40,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import BinaryType, StructField, StructType
@@ -90,15 +91,17 @@ def _arrow_group_codes(rb: pa.RecordBatch, keys: list[str]) -> tuple[np.ndarray,
     if len(columns) == 1:
         codes, vals = columns[0]
         return codes, [(v,) for v in vals]
-    # mixed-radix code per row over the per-key codes, compacted to the
-    # combinations present
-    sizes = [len(vals) for _, vals in columns]
-    codes = np.ravel_multi_index([c for c, _ in columns], sizes)
-    uniq, inv = np.unique(codes, return_inverse=True)
-    per_key = [
-        [vals[i] for i in part.tolist()] for (_, vals), part in zip(columns, np.unravel_index(uniq, sizes))
-    ]
-    return inv.astype(np.int64), list(zip(*per_key))
+    # fold in one key at a time, compacting to the combinations present
+    # after each step, so a code never exceeds rows x one key's size (a
+    # mixed-radix code over all keys overflows int64 on wide keys);
+    # ``parts`` holds each key's code for every combination so far
+    codes, first = columns[0]
+    parts = [np.arange(len(first))]
+    for c, vals in columns[1:]:
+        uniq, codes = np.unique(codes * len(vals) + c, return_inverse=True)
+        parts = [part[uniq // len(vals)] for part in parts] + [uniq % len(vals)]
+    per_key = [[vals[i] for i in part.tolist()] for (_, vals), part in zip(columns, parts)]
+    return codes.astype(np.int64), list(zip(*per_key))
 
 
 def _segments(codes: np.ndarray) -> Iterator[tuple[int, np.ndarray]]:
@@ -207,23 +210,92 @@ def merge_agg(family):
     """Grouped-agg pandas UDF ``<family.name>_merge_agg``: a column of
     sketch blobs -> their merge. NULL blobs are skipped and an all-NULL
     group merges to NULL: a default-parameter empty sketch there would
-    fail the next merge with a partial of other parameters."""
+    fail the next merge with a partial of other parameters. Kept for what
+    needs a Spark aggregate function (SQL, streaming, rollups); ``merge``
+    is the DataFrame path."""
 
     def merge(blobs: pd.Series) -> bytes:
-        acc = None
-        for blob in blobs:
-            if blob is None:
-                continue
-            state = family.deserialize(bytes(blob))
-            acc = state if acc is None else family.merge(acc, state)
+        acc = _merge_blobs(family, blobs)
         return None if acc is None else family.serialize(acc)
 
     merge.__name__ = f"{family.name}_merge_agg"
     return pandas_udf(BinaryType())(merge)
 
 
+def _merge_blobs(family, blobs):
+    """The merged state of one group's blobs; None when all are NULL."""
+    acc = None
+    for blob in blobs:
+        if blob is None:
+            continue
+        state = family.deserialize(bytes(blob))
+        acc = state if acc is None else family.merge(acc, state)
+    return acc
+
+
+# a merge yields its groups in batches of at most this many rows
+_MERGE_OUT_ROWS = 4096
+
+
+def merge(partials: DataFrame, keys: list[str], family, finish=None) -> DataFrame:
+    """keys... + the merged ``family.column`` sketch per group of
+    ``partials`` (one global row when ``keys`` is empty).
+
+    One hash shuffle by the keys (one partition without keys) and one
+    ``mapInArrow``: each reduce partition buffers its partial rows as
+    Arrow, groups them once and merges one group at a time, so memory is
+    one partition's partials plus one group's state, and no JVM sort or
+    per-group UDF call is planned. NULL blobs are skipped and an all-NULL
+    group merges to NULL.
+
+    ``finish=(field, fn)`` replaces the sketch column by ``field`` holding
+    ``fn(state)`` of the merged state (``fn(None)`` for a group with no
+    blob), e.g. an estimate, so no serialize/deserialize round trip or
+    further Python operator follows the merge."""
+    if partials.isStreaming:
+        raise ValueError(
+            "fold.merge needs the whole input; merge a streaming frame with merge_agg in a stateful aggregation"
+        )
+    family.empty()  # bad parameters fail here, on the driver
+    out_field = StructField(family.column, BinaryType(), True) if finish is None else finish[0]
+    out_schema = StructType([partials.schema[k] for k in keys] + [out_field])
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def value(acc):
+        if finish is not None:
+            return finish[1](acc)
+        return None if acc is None else family.serialize(acc)
+
+    def out_batch(rows: list) -> pa.RecordBatch:
+        return pa.RecordBatch.from_pydict(dict(zip(arrow_schema.names, map(list, zip(*rows)))), schema=arrow_schema)
+
+    def merge_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rbs = [rb for rb in batches if rb.num_rows]
+        if not rbs:
+            if not keys:  # a global merge of nothing is one row, like a global aggregate
+                yield out_batch([(value(None),)])
+            return
+        table = pa.Table.from_batches(rbs)
+        blobs = table.column(family.column).to_pylist()
+        if keys:
+            codes, groups = _arrow_group_codes(table.select(keys).combine_chunks().to_batches()[0], keys)
+        else:
+            codes, groups = np.zeros(len(blobs), dtype=np.int64), [()]
+        del rbs, table  # the blobs live on as Python bytes: hold one copy of the partition
+        rows: list = []
+        for code, sel in _segments(codes):
+            rows.append((*groups[code], value(_merge_blobs(family, [blobs[i] for i in sel.tolist()]))))
+            if len(rows) == _MERGE_OUT_ROWS:
+                yield out_batch(rows)
+                rows = []
+        if rows:
+            yield out_batch(rows)
+
+    shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
+    return shuffled.select(*keys, family.column).mapInArrow(merge_partition, schema=out_schema)
+
+
 def sketch(df: DataFrame, keys: list[str], value_col: str, family) -> DataFrame:
     """keys... + the merged ``family.column`` sketch per group (one global
     row when ``keys`` is empty): partial fold, sketch-only shuffle, merge."""
-    merged = merge_agg(family)(F.col(family.column)).alias(family.column)
-    return partial_sketches(df, keys, value_col, family).groupBy(*keys).agg(merged)
+    return merge(partial_sketches(df, keys, value_col, family), keys, family)

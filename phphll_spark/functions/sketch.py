@@ -10,9 +10,12 @@ Scale design (the part that matters at 10^12 rows):
   that follows carries only those sketches — never raw elements. This
   mirrors the reference's batched ``pfAddMany`` hot path
   (hyperloglog.c:1192-1219) with Arrow batches as the batch unit.
-- ``hll_merge_agg`` is the final/merge half: an associative-commutative
+- The final/merge half is ``fold.merge``: a shuffle by the keys and one
+  partition-wise ``mapInArrow`` taking the associative-commutative
   element-wise max (hyperloglog.c:1038-1077), safe under any partition
-  grouping or AQE re-plan.
+  grouping or AQE re-plan. ``hll_count_distinct`` takes the estimate
+  inside that merge. ``hll_merge_agg`` is the same merge as a grouped-agg
+  pandas UDF, for SQL, streaming and rollups.
 - Grouped-agg pandas UDF ``hll_sketch_agg`` is also provided for SQL
   composition (`GROUP BY` over raw values); note Spark executes grouped-agg
   pandas UDFs with a full shuffle of input rows, so the two-phase operator
@@ -43,7 +46,7 @@ from pyspark.sql.types import (
 )
 
 from .. import codec, kernel
-from ..fold import _arrow_to_buffers, merge_agg, partial_sketches, sketch
+from ..fold import _arrow_to_buffers, merge, merge_agg, partial_sketches
 from ..kernel import HLL_P_DEFAULT
 
 # In-flight sparse groups promote to a raw 2^p buffer past this many set
@@ -301,9 +304,14 @@ def hll_sketch(
     each partition's accumulator dict only holds its own groups — use when
     group cardinality is high relative to executor memory.
     """
+    family = HLLFamily(p)
+    return merge(_partials(df, keys, value_col, family, pre_repartition), keys, family)
+
+
+def _partials(df: DataFrame, keys: list[str], value_col: str, family: HLLFamily, pre_repartition: int | None):
     if pre_repartition and keys:
         df = df.repartition(pre_repartition, *[F.col(k) for k in keys])
-    return sketch(df, keys, value_col, HLLFamily(p))
+    return partial_sketches(df, keys, value_col, family)
 
 
 def hll_count_distinct(
@@ -316,9 +324,18 @@ def hll_count_distinct(
     pre_repartition: int | None = None,
 ) -> DataFrame:
     """APPROX COUNT DISTINCT of ``value_col`` per group — the engine's
-    flagship operator (the distributed pfAdd+pfCount+pfMerge pipeline)."""
-    sk = hll_sketch(df, keys, value_col, p, pre_repartition=pre_repartition)
-    return sk.select(*keys, hll_count_sketch(F.col("sketch")).alias(alias))
+    flagship operator (the distributed pfAdd+pfCount+pfMerge pipeline).
+    The estimate is taken from the merged registers inside the merge, so
+    the plan has two Python operators: the fold and the merge."""
+    family = HLLFamily(p)
+    finish = (StructField(alias, LongType(), False), _estimate)
+    return merge(_partials(df, keys, value_col, family, pre_repartition), keys, family, finish)
+
+
+def _estimate(regs: np.ndarray | None) -> int:
+    """pfCount of merged registers; 0 for a group with no sketch, as
+    ``hll_count_sketch`` gives for a NULL blob."""
+    return 0 if regs is None else kernel.estimate(regs)
 
 
 def hll_global_distinct(df: DataFrame, value_col: str, p: int = HLL_P_DEFAULT) -> int:

@@ -66,11 +66,17 @@ def murmur64a_windows(
     ``seed`` may be a sequence of seeds: the result is then one row per
     seed, shape ``(len(seed), N)``. Each chunk is gathered and mixed once
     and folded into every seed's state (``h[..., i]`` indexes both shapes).
+
+    Rows are hashed in tiles of ~1 MB of window bytes (4096..16384 rows),
+    so each tile's hash state and positions stay in cache across its chunk
+    loop instead of streaming batch-sized arrays through DRAM once per
+    chunk.
     """
     seeds = np.asarray(seed, dtype=np.uint64)
     n = len(starts)
+    out = np.empty(seeds.shape + (n,), dtype=np.uint64)
     if n == 0:
-        return np.empty(seeds.shape + (0,), dtype=np.uint64)
+        return out
     # pad by 8 zero bytes so u64/tail gathers never read out of bounds
     padded = np.empty(len(buf) + 8, dtype=np.uint8)
     padded[: len(buf)] = buf
@@ -79,14 +85,26 @@ def murmur64a_windows(
 
     starts = starts.astype(np.int64, copy=False)
     lens = lens.astype(np.int64, copy=False)
-    ulens = lens.astype(np.uint64)
-    h = seeds[..., None] ^ (ulens * _M64)
+    tile = _tile_rows(lens)
+    for t0 in range(0, n, tile):
+        out[..., t0:t0 + tile] = _murmur_tile(u64, seeds, starts[t0:t0 + tile], lens[t0:t0 + tile])
+    return out
+
+
+def _tile_rows(lens: np.ndarray) -> int:
+    """Rows per murmur tile: ~1 MB of window bytes, 4096..16384 rows."""
+    return min(max((1 << 20) // max(int(lens.sum()) // len(lens), 1), 4096), 16384)
+
+
+def _murmur_tile(u64: np.ndarray, seeds: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """MurmurHash64A of one tile of windows over the padded uint64 view."""
+    h = seeds[..., None] ^ (lens.astype(np.uint64) * _M64)
 
     full_chunks = lens >> 3  # number of whole 8-byte words per window
     min_chunks = int(full_chunks.min())
     max_chunks = int(full_chunks.max())
 
-    # chunks every window has: mask-free in-place loop over the whole batch
+    # chunks every window has: mask-free in-place loop over the whole tile
     # (web text is near-uniform length, so this covers almost all work)
     pos = starts.copy()
     for _ in range(min_chunks):

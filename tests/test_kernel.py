@@ -293,3 +293,39 @@ def test_sparse_update_matches_dense_registers():
         np.empty(0, np.int64), np.empty(0, np.uint8), np.empty(0, np.int64), np.empty(0, np.uint8)
     )
     assert len(e_i) == 0 and len(e_r) == 0
+
+
+@pytest.mark.parametrize(
+    "blocks",
+    [
+        [(4095, 256)],
+        [(4096, 256)],
+        [(4097, 256)],
+        # a tile of 1000-byte rows, a tile of 0..7-byte rows (tail only), a
+        # tile of empty rows (no chunk and no tail), then one 9-byte row
+        [(4096, 1000), (4096, -7), (4096, 0), (1, 9)],
+        # ragged rows straddling the first tile boundary
+        [(4090, 300), (12, -40), (4000, 300)],
+    ],
+    ids=["tile-1", "tile", "tile+1", "long-short-empty", "straddle"],
+)
+def test_murmur_tile_boundaries(blocks):
+    """Row tiling is invisible: every row hashes as it does alone (checked
+    with ``hash_one`` near each tile boundary, and elsewhere against calls
+    of 1000 rows, which tile differently), with one seed or several. A
+    negative length -k draws lengths in 0..k."""
+    rng = np.random.default_rng(len(blocks))
+    lens = np.concatenate(
+        [rng.integers(0, -ln + 1, n) if ln < 0 else np.full(n, ln) for n, ln in blocks]
+    )
+    tile = kernel._tile_rows(lens)
+    assert tile == 4096
+    items = [bytes(rng.integers(0, 256, size=int(n), dtype=np.uint8)) for n in lens]
+    data, offsets = kernel.bytes_to_buffers(items)
+    seeds = [kernel.MURMUR_SEED, 7]
+    fused = kernel.murmur64a(data, offsets, seed=seeds)
+    near = [i for b in range(0, len(items) + tile, tile) for i in range(b - 20, b + 20) if 0 <= i < len(items)]
+    for row, seed in zip(fused, seeds):
+        assert [int(row[i]) for i in near] == [kernel.hash_one(items[i], seed) for i in near]
+        alone = [kernel.murmur64a(*kernel.bytes_to_buffers(items[i : i + 1000]), seed) for i in range(0, len(items), 1000)]
+        np.testing.assert_array_equal(row, np.concatenate(alone))

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 import time
 
@@ -22,7 +23,9 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the library of the checkout this script lives in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def _norm_value(v):
