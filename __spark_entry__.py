@@ -26,7 +26,8 @@ import os
 from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -123,13 +124,12 @@ def q_hll_merge_assoc_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials re-merged — merge associativity across groupings."""
     docs = load_table(spark, sf_dir, "documents")
     direct = hll_count_distinct(docs, ["lang"], "text", alias="direct_est")
-    from phphll_spark.functions.sketch import make_hll_merge_agg
+    from phphll_spark.fold import merge
+    from phphll_spark.functions.sketch import HLLFamily
 
-    merged = (
-        hll_sketch(docs, ["lang", "source"], "text")
-        .groupBy("lang")
-        .agg(make_hll_merge_agg()(F.col("sketch")).alias("sketch"))
-        .select("lang", hll_count_sketch(F.col("sketch")).alias("two_level_est"))
+    partials = hll_sketch(docs, ["lang", "source"], "text").select("lang", "sketch")
+    merged = merge(partials, ["lang"], HLLFamily()).select(
+        "lang", hll_count_sketch(F.col("sketch")).alias("two_level_est")
     )
     return direct.join(merged, "lang").select(
         "lang", (F.col("direct_est") == F.col("two_level_est")).alias("assoc_ok")
@@ -688,12 +688,12 @@ def q_hll_intersection_event_types(spark: SparkSession, sf_dir: str) -> DataFram
     merge = make_hll_merge_agg()
     tmerge = make_theta_merge_agg()
 
-    @F.pandas_udf("long")
-    def _sum_long(v: pd.Series) -> int:
-        # a plain F.sum cannot sit in the same .agg as grouped-agg pandas
+    @F.arrow_udf("long")
+    def _sum_long(v: pa.Array) -> int:
+        # a plain F.sum cannot sit in the same .agg as grouped-agg Arrow
         # UDFs (INVALID_PANDAS_UDF_PLACEMENT) — so the exact count merges
-        # through a pandas sum in the same single aggregation
-        return int(v.sum())
+        # through an Arrow sum in the same single aggregation
+        return pc.sum(v).as_py() or 0
 
     agg = partials.agg(
         merge(F.col("sketch_uid_a")).alias("sa"),

@@ -6,9 +6,9 @@ partition folds its rows into one partial sketch per group
 shuffle carries only those sketches, never raw elements, and an
 associative merge aggregate combines them. The plumbing of that shape —
 group codes, sort-and-segment, the per-group accumulator, the output
-frame, the partition-wise ``merge`` (and the ``merge_agg`` pandas UDF for
-SQL and streaming) — lives here once. A new sketch is a family object,
-not a new fold.
+frame, the partition-wise ``merge`` (and the ``merge_agg`` Arrow UDF for
+what needs a Spark aggregate function) — lives here once. A new sketch
+is a family object, not a new fold.
 
 A family is a small picklable object built from its parameters. It
 supplies:
@@ -36,14 +36,13 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
 
 
 def _arrow_to_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
@@ -167,6 +166,22 @@ class ObjectFamily:
         return a.merge(b)
 
 
+def quantile_udf(cls):
+    """Scalar Arrow UDF ``<cls>_quantile(blob, q)`` of an ``ObjectFamily``
+    sketch class: ``cls.deserialize(blob).quantile(q)``, NULL where the
+    blob or q is NULL (and where the quantile is NaN)."""
+
+    def quantile(blobs: pa.Array, qs: pa.Array) -> pa.Array:
+        out = np.full(len(blobs), np.nan)
+        for i, (blob, q) in enumerate(zip(blobs.to_pylist(), qs.to_pylist())):
+            if blob is not None and q is not None:
+                out[i] = cls.deserialize(blob).quantile(float(q))  # a SQL literal q is a Decimal
+        return pa.array(out, from_pandas=True)
+
+    quantile.__name__ = f"{cls.__name__.lower()}_quantile"
+    return arrow_udf(DoubleType())(quantile)
+
+
 def partial_sketches(df: DataFrame, keys: list[str], value_col: str, family) -> DataFrame:
     """Per-partition, per-group partial sketches via ``mapInArrow``.
 
@@ -207,19 +222,19 @@ def partial_sketches(df: DataFrame, keys: list[str], value_col: str, family) -> 
 
 
 def merge_agg(family):
-    """Grouped-agg pandas UDF ``<family.name>_merge_agg``: a column of
+    """Grouped-agg Arrow UDF ``<family.name>_merge_agg``: a column of
     sketch blobs -> their merge. NULL blobs are skipped and an all-NULL
     group merges to NULL: a default-parameter empty sketch there would
     fail the next merge with a partial of other parameters. Kept for what
-    needs a Spark aggregate function (SQL, streaming, rollups); ``merge``
-    is the DataFrame path."""
+    needs a Spark aggregate function (SQL, rollups, several merges in one
+    aggregation); ``merge`` is the DataFrame path."""
 
-    def merge(blobs: pd.Series) -> bytes:
-        acc = _merge_blobs(family, blobs)
+    def merge(blobs: pa.Array) -> bytes:
+        acc = _merge_blobs(family, blobs.to_pylist())
         return None if acc is None else family.serialize(acc)
 
     merge.__name__ = f"{family.name}_merge_agg"
-    return pandas_udf(BinaryType())(merge)
+    return arrow_udf(BinaryType())(merge)
 
 
 def _merge_blobs(family, blobs):
@@ -254,7 +269,7 @@ def merge(partials: DataFrame, keys: list[str], family, finish=None) -> DataFram
     further Python operator follows the merge."""
     if partials.isStreaming:
         raise ValueError(
-            "fold.merge needs the whole input; merge a streaming frame with merge_agg in a stateful aggregation"
+            "fold.merge needs the whole input; merge a streaming frame's micro-batches in foreachBatch"
         )
     family.empty()  # bad parameters fail here, on the driver
     out_field = StructField(family.column, BinaryType(), True) if finish is None else finish[0]

@@ -1,4 +1,4 @@
-"""Spark surface of the HLL engine: vectorized pandas/Arrow UDFs and
+"""Spark surface of the HLL engine: vectorized Arrow UDFs and
 DataFrame-level operators.
 
 Scale design (the part that matters at 10^12 rows):
@@ -15,10 +15,10 @@ Scale design (the part that matters at 10^12 rows):
   element-wise max (hyperloglog.c:1038-1077), safe under any partition
   grouping or AQE re-plan. ``hll_count_distinct`` takes the estimate
   inside that merge. ``hll_merge_agg`` is the same merge as a grouped-agg
-  pandas UDF, for SQL, streaming and rollups.
-- Grouped-agg pandas UDF ``hll_sketch_agg`` is also provided for SQL
+  Arrow UDF, for what needs an aggregate function (SQL, rollups).
+- Grouped-agg Arrow UDF ``hll_sketch_agg`` is also provided for SQL
   composition (`GROUP BY` over raw values); note Spark executes grouped-agg
-  pandas UDFs with a full shuffle of input rows, so the two-phase operator
+  UDFs with a full shuffle of input rows, so the two-phase operator
   above is the preferred path at scale.
 
 No per-row Python anywhere: hashing reads Arrow string buffers directly
@@ -31,11 +31,10 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
@@ -203,14 +202,14 @@ def hll_partial_sketches_multi(
 
 
 def make_hll_merge_agg(p: int = HLL_P_DEFAULT):
-    """Grouped-agg pandas UDF ``hll_merge_agg``: column of HYLL blobs ->
+    """Grouped-agg Arrow UDF ``hll_merge_agg``: column of HYLL blobs ->
     merged HYLL blob (element-wise max). NULL blobs are skipped
     (hyperloglog.c:1293,1319); an all-NULL group merges to NULL."""
     return merge_agg(HLLFamily(p))
 
 
 def make_hll_sketch_agg(p: int = HLL_P_DEFAULT):
-    """Grouped-agg pandas UDF over raw values (SQL convenience path).
+    """Grouped-agg Arrow UDF over raw values (SQL convenience path).
 
     ``SELECT lang, hll_count(hll_sketch_agg(url)) ... GROUP BY lang``.
     Shuffles raw rows (Spark grouped-agg UDFs have no partial agg); prefer
@@ -219,9 +218,9 @@ def make_hll_sketch_agg(p: int = HLL_P_DEFAULT):
 
     family = HLLFamily(p)
 
-    @pandas_udf(BinaryType())
-    def hll_sketch_agg(values: pd.Series) -> bytes:
-        prepared, _ = family.batch(pa.array(values, from_pandas=True))
+    @arrow_udf(BinaryType())
+    def hll_sketch_agg(values: pa.Array) -> bytes:
+        prepared, _ = family.batch(values)
         return family.serialize(family.fold(family.empty(), prepared, slice(None)))
 
     return hll_sketch_agg
@@ -231,58 +230,47 @@ def make_hll_sketch_agg(p: int = HLL_P_DEFAULT):
 # Scalar sketch functions
 # ---------------------------------------------------------------------------
 
-@pandas_udf(LongType())
-def hll_count_sketch(blobs: pd.Series) -> pd.Series:
+@arrow_udf(LongType())
+def hll_count_sketch(blobs: pa.Array) -> pa.Array:
     """Estimate per sketch blob (pfCount; serves the cached cardinality
     when the header's dirty bit is clear, hyperloglog.c:1223-1268)."""
-    out = np.empty(len(blobs), dtype=np.int64)
-    for i, blob in enumerate(blobs):
-        if blob is None:
-            out[i] = 0
-            continue
-        sk = codec.deserialize(bytes(blob))
-        out[i] = sk.cached_card if sk.cached_card is not None else kernel.estimate(sk.regs)
-    return pd.Series(out)
+    out = np.zeros(len(blobs), dtype=np.int64)
+    for i, blob in enumerate(blobs.to_pylist()):
+        if blob is not None:
+            sk = codec.deserialize(blob)
+            out[i] = sk.cached_card if sk.cached_card is not None else kernel.estimate(sk.regs)
+    return pa.array(out)
 
 
-@pandas_udf(BinaryType())
-def hll_merge_pair(a: pd.Series, b: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def hll_merge_pair(a: pa.Array, b: pa.Array) -> pa.Array:
     """Pure two-sketch merge (hll_merge, php/hll.c:463-585); NULL = empty."""
     out = []
-    for x, y in zip(a, b):
+    for x, y in zip(a.to_pylist(), b.to_pylist()):
         if x is None and y is None:
             out.append(codec.serialize(kernel.empty_registers()))
-            continue
-        if x is None:
-            out.append(bytes(y))
-            continue
-        if y is None:
-            out.append(bytes(x))
-            continue
-        rx = codec.deserialize(bytes(x)).regs
-        ry = codec.deserialize(bytes(y)).regs
-        out.append(codec.serialize(kernel.merge_registers(rx, ry)))
-    return pd.Series(out)
+        elif x is None or y is None:
+            out.append(x if y is None else y)
+        else:
+            out.append(codec.serialize(kernel.merge_registers(codec.deserialize(x).regs, codec.deserialize(y).regs)))
+    return pa.array(out, pa.binary())
 
 
-@pandas_udf(BinaryType())
-def hll_promote_sketch(blobs: pd.Series) -> pd.Series:
+@arrow_udf(BinaryType())
+def hll_promote_sketch(blobs: pa.Array) -> pa.Array:
     """Force dense encoding; idempotent (hll_promote, php/hll.c:707-731)."""
-    return pd.Series([None if b is None else codec.promote(bytes(b)) for b in blobs])
+    return pa.array([None if b is None else codec.promote(b) for b in blobs.to_pylist()], pa.binary())
 
 
-@pandas_udf(StringType())
-def hll_encoding(blobs: pd.Series) -> pd.Series:
+@arrow_udf(StringType())
+def hll_encoding(blobs: pa.Array) -> pa.Array:
     """'dense' | 'sparse' (hll_info, php/hll.c:734-762)."""
-    return pd.Series([None if b is None else codec.info(bytes(b))["encoding"] for b in blobs])
+    return pa.array([None if b is None else codec.info(b)["encoding"] for b in blobs.to_pylist()], pa.string())
 
 
-@pandas_udf(LongType())
-def hll_nonzero_registers(blobs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [0 if b is None else codec.info(bytes(b))["nonzero_registers"] for b in blobs],
-        dtype="int64",
-    )
+@arrow_udf(LongType())
+def hll_nonzero_registers(blobs: pa.Array) -> pa.Array:
+    return pa.array([0 if b is None else codec.info(b)["nonzero_registers"] for b in blobs.to_pylist()], pa.int64())
 
 
 # ---------------------------------------------------------------------------
@@ -352,16 +340,17 @@ def hll_global_distinct(df: DataFrame, value_col: str, p: int = HLL_P_DEFAULT) -
 def element_str(col: Column | str) -> Column:
     """Fast native normalization to Spark's string rendering (JVM-side,
     whole-stage codegen). For exact PHP float rendering use
-    element_php_str (pandas UDF, parity path)."""
+    element_php_str (Arrow UDF, parity path)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.coalesce(c.cast("string"), F.lit(""))
 
 
-@pandas_udf(StringType())
-def _php_render_double(values: pd.Series) -> pd.Series:
+@arrow_udf(StringType())
+def _php_render_double(values: pa.Array) -> pa.Array:
+    """%.14G of each double; NULL and NaN give NULL."""
     from ..hll import php_string
 
-    return values.map(lambda v: None if v is None or v != v else php_string(float(v)))
+    return pa.array([None if v is None or v != v else php_string(v) for v in values.to_pylist()], pa.string())
 
 
 def element_php_str(col: Column | str, spark_type: str = "string") -> Column:

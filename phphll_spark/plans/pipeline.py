@@ -26,11 +26,10 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -43,16 +42,17 @@ from pyspark.sql.types import (
 )
 
 from .. import codec, kernel
-from ..functions.sketch import hll_count_sketch, make_hll_merge_agg
+from ..fold import merge, partial_sketches
+from ..functions.sketch import HLLFamily, hll_count_sketch
 from ..kernel import HLL_P_DEFAULT
 
 MANIFEST = "manifest.json"
 
 
-def _partials_schema(key_cols: list[str]) -> StructType:
+def _partials_schema(key_fields: list[StructField]) -> StructType:
     return StructType(
         [StructField("split_id", StringType(), False)]
-        + [StructField(k, StringType(), True) for k in key_cols]
+        + key_fields
         + [
             StructField("sketch", BinaryType(), False),
             StructField("row_count", LongType(), False),
@@ -86,10 +86,10 @@ class PipelineResult:
     run_id: str
     processed_splits: int
     skipped_splits: int
-    results: DataFrame  # keys... , sketch, approx_distinct
+    results: DataFrame  # keys..., the merged sketch column (+ approx_distinct for HLL)
 
 
-def _fold_with_lineage(key_cols: list[str], value_col: str, p: int):
+def _fold_with_lineage(key_cols: list[str], value_col: str, p: int, out_schema: StructType):
     """Arrow-native fold (mapInArrow): hash straight from Arrow buffers,
     group codes from Arrow dictionary encoding — same hot path as
     functions.sketch.hll_partial_sketches, plus per-group lineage."""
@@ -100,7 +100,7 @@ def _fold_with_lineage(key_cols: list[str], value_col: str, p: int):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     m = kernel.m_for_p(p)
-    arrow_schema = to_arrow_schema(_partials_schema(key_cols))
+    arrow_schema = to_arrow_schema(out_schema)
     group_cols = ["_split_id"] + key_cols
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -149,9 +149,9 @@ def _pipeline_core(
     input_path: str,
     checkpoint_dir: str,
     *,
+    key_cols: list[str],
+    family,
     make_partials,
-    finish,
-    empty_result,
     fail_after_splits: int | None = None,
 ) -> PipelineResult:
     """The shared resumable-checkpoint loop (both pipeline flavors run
@@ -165,14 +165,16 @@ def _pipeline_core(
       AFTER the partials file lands, so a mid-run kill leaves at worst an
       orphan partials file the manifest never references
     - ``make_partials(subset_df)`` folds this run's splits (the subset
-      carries a ``_split_id`` column); ``finish(all_partials_df)`` merges
-      every manifest-listed partials file into the final results;
-      ``empty_result()`` is returned when nothing is checkpointed yet
+      carries a ``_split_id`` column) into ``key_cols..., family.column``
+      rows; ``fold.merge`` then merges every manifest-listed partials file
+      into the results. Key types come from the input's schema, so the
+      results have the same schema before the first commit as after it.
     """
     os.makedirs(checkpoint_dir, exist_ok=True)
     manifest = _read_manifest(checkpoint_dir)
     done = set(manifest["completed_splits"])
-    all_splits = sorted(spark.read.parquet(input_path).inputFiles())
+    source = spark.read.parquet(input_path)
+    all_splits = sorted(source.inputFiles())
     todo = [s for s in all_splits if s not in done]
     if fail_after_splits is not None:
         todo = todo[:fail_after_splits]
@@ -194,10 +196,12 @@ def _pipeline_core(
         _publish_manifest(checkpoint_dir, manifest)
 
     manifest = _read_manifest(checkpoint_dir)
-    if not manifest["partial_files"]:
-        results = empty_result()
+    if manifest["partial_files"]:
+        allp = spark.read.parquet(*manifest["partial_files"]).select(*key_cols, family.column)
+        results = merge(allp, key_cols, family)
     else:
-        results = finish(spark.read.parquet(*manifest["partial_files"]))
+        fields = [source.schema[k] for k in key_cols] + [StructField(family.column, BinaryType(), True)]
+        results = spark.createDataFrame([], StructType(fields))
     return PipelineResult(
         run_id=run_id,
         processed_splits=processed,
@@ -218,7 +222,8 @@ def run_sketch_pipeline(
     fail_after_splits: int | None = None,
 ) -> PipelineResult:
     """One (possibly resuming) HLL pipeline run over a parquet directory
-    (specialized Arrow fold with per-split lineage rows).
+    (specialized Arrow fold with per-split lineage rows); the results carry
+    ``approx_distinct`` beside each merged ``sketch``.
 
     ``salt_partitions``: repartition the scan by xxhash64(value, split) to
     break url-host skew before sketching — harmless to results because
@@ -236,29 +241,20 @@ def run_sketch_pipeline(
             subset = subset.repartition(
                 salt_partitions, F.xxhash64(F.col(value_col), F.col("_split_id"))
             )
-        return subset.mapInArrow(
-            _fold_with_lineage(key_cols, value_col, p), schema=_partials_schema(key_cols)
-        )
+        schema = _partials_schema([subset.schema[k] for k in key_cols])
+        return subset.mapInArrow(_fold_with_lineage(key_cols, value_col, p, schema), schema=schema)
 
-    def finish(allp: DataFrame) -> DataFrame:
-        merge = make_hll_merge_agg(p)
-        merged = allp.groupBy(*key_cols).agg(merge(F.col("sketch")).alias("sketch"))
-        return merged.withColumn("approx_distinct", hll_count_sketch(F.col("sketch")))
-
-    def empty_result() -> DataFrame:
-        empty = spark.createDataFrame([], _partials_schema(key_cols))
-        return empty.select(*key_cols, F.col("sketch")).withColumn(
-            "approx_distinct", hll_count_sketch(F.col("sketch"))
-        )
-
-    return _pipeline_core(
+    res = _pipeline_core(
         spark,
         input_path,
         checkpoint_dir,
+        key_cols=key_cols,
+        family=HLLFamily(p),
         make_partials=make_partials,
-        finish=finish,
-        empty_result=empty_result,
         fail_after_splits=fail_after_splits,
+    )
+    return replace(
+        res, results=res.results.withColumn("approx_distinct", hll_count_sketch(F.col("sketch")))
     )
 
 
@@ -268,51 +264,30 @@ def run_summary_pipeline(
     checkpoint_dir: str,
     *,
     key_cols: list[str],
-    partials_fn,
-    merge_agg_factory,
-    sketch_col: str,
-    key_schema: StructType | None = None,
+    value_col: str,
+    family,
     fail_after_splits: int | None = None,
 ) -> PipelineResult:
-    """The resumable checkpoint pipeline for ANY mergeable summary in the
-    family (CMS / Bloom / t-digest / KLL / Misra–Gries — same shape as the
-    HLL ``run_sketch_pipeline``, which keeps its specialized Arrow fold
-    with per-split lineage).
+    """The resumable checkpoint pipeline for ANY sketch family (a
+    ``fold.py`` family object: ``CMSFamily``, ``BloomFamily``,
+    ``ThetaFamily``, ``MGFamily``, ``ObjectFamily`` for KLL / t-digest, or
+    ``HLLFamily``) — the same shape as the HLL ``run_sketch_pipeline``,
+    which keeps its specialized fold with per-split lineage.
 
-    ``partials_fn(subset_df) -> DataFrame[key_cols..., sketch_col]`` folds
-    one run's splits into partial summaries; resume correctness needs no
-    split column in the partials — the manifest's completed-file set is
-    the unit of work, and re-merging whole partial files is safe because
-    the family's merges are associative/commutative (max/OR families are
+    Each run folds its splits with ``fold.partial_sketches(subset,
+    key_cols, value_col, family)``; resume correctness needs no split
+    column in the partials — the manifest's completed-file set is the
+    unit of work, and re-merging whole partial files is safe because the
+    family's merges are associative/commutative (max/OR families are
     idempotent too; counter families are never re-folded thanks to the
-    file-level dedupe).
-
-    ``key_schema``: the key columns' StructType, used for the
-    nothing-checkpointed-yet empty result so first-run consumers see the
-    same schema as the finish() path (non-string keys — e.g. a DateType
-    day — would otherwise come back as strings). Defaults to StringType
-    keys for backward compatibility."""
-
-    def finish(allp: DataFrame) -> DataFrame:
-        merge = merge_agg_factory()
-        return allp.groupBy(*key_cols).agg(merge(F.col(sketch_col)).alias(sketch_col))
-
-    def empty_result() -> DataFrame:
-        key_fields = (
-            [key_schema[k] for k in key_cols]
-            if key_schema is not None
-            else [StructField(k, StringType(), True) for k in key_cols]
-        )
-        schema = StructType(list(key_fields) + [StructField(sketch_col, BinaryType(), True)])
-        return spark.createDataFrame([], schema)
-
+    file-level dedupe). Results: ``key_cols..., family.column``."""
     return _pipeline_core(
         spark,
         input_path,
         checkpoint_dir,
-        make_partials=lambda subset: partials_fn(subset.drop("_split_id")),
-        finish=finish,
-        empty_result=empty_result,
+        key_cols=key_cols,
+        family=family,
+        make_partials=lambda subset: partial_sketches(subset, key_cols, value_col, family),
         fail_after_splits=fail_after_splits,
     )
 

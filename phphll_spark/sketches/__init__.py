@@ -1,4 +1,6 @@
+from ..fold import ObjectFamily
 from .bloom import (
+    BloomFamily,
     bloom_contains,
     bloom_might_contain,
     bloom_partial_sketches,
@@ -21,6 +23,7 @@ from .tdigest import (
     tdigest_sketch,
 )
 from .cms import (
+    CMSFamily,
     cms_partial_sketches,
     cms_point_estimate,
     cms_query,
@@ -30,6 +33,7 @@ from .cms import (
 )
 from .theta import (
     InvalidThetaError,
+    ThetaFamily,
     make_theta_merge_agg,
     theta_a_not_b,
     theta_estimate,
@@ -42,6 +46,7 @@ from .theta import (
     theta_union_pair,
 )
 from .heavyhitters import (
+    MGFamily,
     make_mg_merge_agg,
     mg_entries,
     mg_partial_sketches,
@@ -77,8 +82,13 @@ def register_sketch_sql_functions(spark) -> None:
     spark.udf.register("theta_union", theta_union_pair)
 
 __all__ = [
+    "BloomFamily",
+    "CMSFamily",
     "KLL",
+    "MGFamily",
+    "ObjectFamily",
     "TDigest",
+    "ThetaFamily",
     "kll_partial_sketches",
     "kll_quantile",
     "kll_sketch",

@@ -16,11 +16,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import arrow_udf, pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf
 from pyspark.sql.types import LongType
 
 from .. import kernel
@@ -119,18 +118,17 @@ def cms_sketch(df: DataFrame, keys: list[str], value_col: str, depth: int = 4, w
     return sketch(df, keys, value_col, CMSFamily(depth, width))
 
 
-@pandas_udf(LongType())
-def cms_total(blobs: pd.Series) -> pd.Series:
+@arrow_udf(LongType())
+def cms_total(blobs: pa.Array) -> pa.Array:
     """Exact number of items folded into the sketch: every add increments
     exactly one counter per row, so any single row sums to N. Lets callers
     derive the ε·N error slack from the sketch itself instead of running a
     separate COUNT job over the source."""
     out = np.zeros(len(blobs), dtype=np.int64)
-    for i, blob in enumerate(blobs):
-        if blob is None:
-            continue
-        out[i] = int(cms_deserialize(bytes(blob))[0].sum())
-    return pd.Series(out)
+    for i, blob in enumerate(blobs.to_pylist()):
+        if blob is not None:
+            out[i] = int(cms_deserialize(blob)[0].sum())
+    return pa.array(out)
 
 
 @arrow_udf(LongType())

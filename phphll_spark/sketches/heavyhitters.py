@@ -34,8 +34,8 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import LongType
+from pyspark.sql.pandas.functions import arrow_udf
+from pyspark.sql.types import LongType, MapType, StringType
 
 from ..fold import merge_agg, partial_sketches, sketch
 
@@ -173,42 +173,36 @@ def mg_sketch(df: DataFrame, keys: list[str], value_col: str, k: int = 256) -> D
     return sketch(df, keys, value_col, MGFamily(k))
 
 
-@pandas_udf(LongType())
-def mg_point_estimate(blobs: pd.Series, items: pd.Series) -> pd.Series:
+@arrow_udf(LongType())
+def mg_point_estimate(blobs: pa.Array, items: pa.Array) -> pa.Array:
     """Estimated count of ``item`` (0 when absent — valid: absent items
-    have true count ≤ N/(k+1))."""
+    have true count ≤ N/(k+1)). Items are keyed by ``str`` of their
+    Python value, as the fold keys them."""
     out = []
-    for blob, item in zip(blobs, items):
+    for blob, item in zip(blobs.to_pylist(), items.to_pylist()):
         if blob is None or item is None:
             out.append(0)
-            continue
-        counts, _, _ = mg_deserialize(bytes(blob))
-        out.append(counts.get(str(item).encode(), 0))
-    return pd.Series(out, dtype="int64")
+        else:
+            out.append(mg_deserialize(blob)[0].get(str(item).encode(), 0))
+    return pa.array(out, pa.int64())
 
 
-@pandas_udf(LongType())
-def mg_total(blobs: pd.Series) -> pd.Series:
+@arrow_udf(LongType())
+def mg_total(blobs: pa.Array) -> pa.Array:
     """Exact number of items folded (N — for the N/(k+1) error slack)."""
+    return pa.array([0 if b is None else mg_deserialize(b)[1] for b in blobs.to_pylist()], pa.int64())
+
+
+@arrow_udf(MapType(StringType(), LongType()))
+def _mg_entries(blobs: pa.Array) -> pa.Array:
     out = []
-    for blob in blobs:
-        out.append(0 if blob is None else mg_deserialize(bytes(blob))[1])
-    return pd.Series(out, dtype="int64")
+    for blob in blobs.to_pylist():
+        counts = {} if blob is None else mg_deserialize(blob)[0]
+        out.append([(key.decode(), c) for key, c in counts.items()])
+    return pa.array(out, pa.map_(pa.string(), pa.int64()))
 
 
 def mg_entries(mg_col):
     """Explodeable map of the summary's (item, est_count) entries as a
     Spark SQL map<string,bigint> (scalar UDF)."""
-
-    @pandas_udf("map<string,bigint>")
-    def _entries(blobs: pd.Series) -> pd.Series:
-        out = []
-        for blob in blobs:
-            if blob is None:
-                out.append({})
-                continue
-            counts, _, _ = mg_deserialize(bytes(blob))
-            out.append({key.decode(): c for key, c in counts.items()})
-        return pd.Series(out)
-
-    return _entries(mg_col)
+    return _mg_entries(mg_col)

@@ -17,13 +17,10 @@ uint64 total_n.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
-from ..fold import ObjectFamily, merge_agg, partial_sketches, sketch
+from ..fold import ObjectFamily, merge_agg, partial_sketches, quantile_udf, sketch
 
 MAGIC = b"KLLQ"
 _C = 2.0 / 3.0
@@ -182,11 +179,4 @@ def kll_sketch(df: DataFrame, keys: list[str], value_col: str, k: int = 200) -> 
     return sketch(df, keys, value_col, ObjectFamily(KLL, k, "kll"))
 
 
-@pandas_udf(DoubleType())
-def kll_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-    out = np.full(len(blobs), np.nan)
-    for i, (blob, q) in enumerate(zip(blobs, qs)):
-        if blob is None or q is None:
-            continue
-        out[i] = KLL.deserialize(bytes(blob)).quantile(float(q))
-    return pd.Series(out)
+kll_quantile = quantile_udf(KLL)

@@ -16,13 +16,10 @@ n float64 means + n float64 weights (LE) + float64 min + float64 max.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
-from ..fold import ObjectFamily, merge_agg, partial_sketches, sketch
+from ..fold import ObjectFamily, merge_agg, partial_sketches, quantile_udf, sketch
 
 MAGIC = b"TDIG"
 
@@ -152,11 +149,4 @@ def tdigest_sketch(df: DataFrame, keys: list[str], value_col: str, delta: int = 
     return sketch(df, keys, value_col, ObjectFamily(TDigest, delta, "tdigest"))
 
 
-@pandas_udf(DoubleType())
-def tdigest_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-    out = np.full(len(blobs), np.nan)
-    for i, (blob, q) in enumerate(zip(blobs, qs)):
-        if blob is None or q is None:
-            continue
-        out[i] = TDigest.deserialize(bytes(blob)).quantile(float(q))
-    return pd.Series(out)
+tdigest_quantile = quantile_udf(TDigest)

@@ -40,11 +40,10 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.functions import arrow_udf
 from pyspark.sql.types import BinaryType, BooleanType, DoubleType, LongType
 
 from .. import kernel
@@ -185,36 +184,29 @@ def theta_sketch(df: DataFrame, keys: list[str], value_col: str, k: int = 4096) 
     return sketch(df, keys, value_col, ThetaFamily(k))
 
 
-@pandas_udf(DoubleType())
-def theta_estimate(blobs: pd.Series) -> pd.Series:
-    out = []
-    for blob in blobs:
-        if blob is None:
-            out.append(0.0)
-            continue
-        entries, theta, _ = theta_deserialize(bytes(blob))
-        out.append(theta_estimate_state(entries, theta))
-    return pd.Series(out, dtype="float64")
-
-
-@pandas_udf(LongType())
-def theta_retained(blobs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [0 if b is None else theta_deserialize(bytes(b))[0].size for b in blobs], dtype="int64"
+@arrow_udf(DoubleType())
+def theta_estimate(blobs: pa.Array) -> pa.Array:
+    return pa.array(
+        [0.0 if b is None else theta_estimate_state(*theta_deserialize(b)[:2]) for b in blobs.to_pylist()],
+        pa.float64(),
     )
 
 
-@pandas_udf(BooleanType())
-def theta_is_exact(blobs: pd.Series) -> pd.Series:
+@arrow_udf(LongType())
+def theta_retained(blobs: pa.Array) -> pa.Array:
+    return pa.array([0 if b is None else theta_deserialize(b)[0].size for b in blobs.to_pylist()], pa.int64())
+
+
+@arrow_udf(BooleanType())
+def theta_is_exact(blobs: pa.Array) -> pa.Array:
     """TRUE while the sketch is still in its EXACT regime: θ == 1 means no
     trim ever happened, so the retained set is the complete distinct-hash
     set and every estimate/set-op on it is exact (up to 64-bit hash
     collisions). θ only ever decreases (fold and merge both min/trim), so
     a merged sketch is exact iff its whole input stream held ≤ k distinct
     values."""
-    return pd.Series(
-        [b is not None and theta_deserialize(bytes(b))[1] == _THETA_ONE for b in blobs],
-        dtype="bool",
+    return pa.array(
+        [b is not None and bool(theta_deserialize(b)[1] == _THETA_ONE) for b in blobs.to_pylist()], pa.bool_()
     )
 
 
@@ -253,20 +245,20 @@ def theta_intersection_report(
 
 
 def _binary_op(op):
-    @pandas_udf(BinaryType())
-    def fn(a: pd.Series, b: pd.Series) -> pd.Series:
+    @arrow_udf(BinaryType())
+    def fn(a: pa.Array, b: pa.Array) -> pa.Array:
         out = []
-        for x, y in zip(a, b):
+        for x, y in zip(a.to_pylist(), b.to_pylist()):
             if x is None or y is None:
                 out.append(None)
                 continue
-            ea, ta, ka = theta_deserialize(bytes(x))
-            eb, tb, kb = theta_deserialize(bytes(y))
+            ea, ta, ka = theta_deserialize(x)
+            eb, tb, kb = theta_deserialize(y)
             if ka != kb:
                 raise InvalidThetaError(f"cannot combine theta sketches of k {ka} and {kb}")
             entries, theta = op((ea, ta), (eb, tb), ka)
             out.append(theta_serialize(entries, theta, ka))
-        return pd.Series(out)
+        return pa.array(out, pa.binary())
 
     return fn
 

@@ -34,23 +34,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import codec, kernel
-from ..functions.sketch import _arrow_idx_rho, hll_partial_sketches, make_hll_merge_agg
+from .. import kernel
+from ..fold import merge, partial_sketches
+from ..functions.sketch import HLLFamily, _arrow_idx_rho
 from ..kernel import HLL_P_DEFAULT
 
 
-def foreach_batch_summary_sink(
-    keys: list[str],
-    table_dir: str,
-    partials_fn,
-    merge_agg_factory,
-    sketch_col: str,
-):
-    """Generic foreachBatch snapshot sink for ANY mergeable summary in the
-    family (HLL / CMS / Bloom / t-digest / KLL / Misra–Gries): compute the
-    micro-batch's partial summaries with ``partials_fn(batch_df)``,
-    re-merge them with the previous snapshot through the family's merge
-    aggregate, and swap the parquet snapshot pointer atomically.
+def foreach_batch_summary_sink(keys: list[str], value_col: str, table_dir: str, family):
+    """Generic foreachBatch snapshot sink for ANY sketch family (a
+    ``fold.py`` family object — HLL / CMS / Bloom / theta / t-digest / KLL
+    / Misra–Gries): fold the micro-batch into partial sketches with
+    ``fold.partial_sketches``, re-merge them with the previous snapshot
+    through ``fold.merge`` (the foreachBatch frame is a batch frame), and
+    swap the parquet snapshot pointer atomically.
 
     Exactly-once per epoch: the _CURRENT pointer records the last APPLIED
     epoch; a retry of an epoch the pointer already covers is skipped
@@ -61,11 +57,10 @@ def foreach_batch_summary_sink(
     names the previous one, so the files being read are never the files
     being overwritten."""
     os.makedirs(table_dir, exist_ok=True)
-    merge = merge_agg_factory()
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        new = partials_fn(batch_df)
+        new = partial_sketches(batch_df, keys, value_col, family)
         pointer = os.path.join(table_dir, "_CURRENT")
         if os.path.exists(pointer):
             with open(pointer) as f:
@@ -86,9 +81,8 @@ def foreach_batch_summary_sink(
                 return  # retry of an already-applied epoch: no-op
             old = spark.read.parquet(os.path.join(table_dir, current))
             new = new.unionByName(old)
-        merged = new.groupBy(*keys).agg(merge(F.col(sketch_col)).alias(sketch_col))
         snap = f"snap-{epoch_id}"
-        merged.write.mode("overwrite").parquet(os.path.join(table_dir, snap))
+        merge(new, keys, family).write.mode("overwrite").parquet(os.path.join(table_dir, snap))
         tmp = pointer + ".tmp"
         with open(tmp, "w") as f:
             f.write(f"{snap} {epoch_id}")
@@ -106,13 +100,7 @@ def foreach_batch_sketch_sink(
     """HLL snapshot sink: merges each micro-batch's group sketches into
     ``table_dir`` (parquet snapshot: data file + _CURRENT pointer swapped
     atomically). The HLL instance of ``foreach_batch_summary_sink``."""
-    return foreach_batch_summary_sink(
-        keys,
-        table_dir,
-        lambda df: hll_partial_sketches(df, keys, value_col, p),
-        lambda: make_hll_merge_agg(p),
-        "sketch",
-    )
+    return foreach_batch_summary_sink(keys, value_col, table_dir, HLLFamily(p))
 
 
 def streaming_dedup_exact(

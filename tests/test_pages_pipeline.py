@@ -122,14 +122,7 @@ def test_summary_pipeline_kill_resume_cms_and_mg(spark, tmp_path):
     kill after half the splits, resume, and the final CMS point estimates
     and MG counts equal a single uninterrupted run's."""
     from phphll_spark.plans import run_summary_pipeline
-    from phphll_spark.sketches import (
-        cms_partial_sketches,
-        cms_point_estimate,
-        make_cms_merge_agg,
-        make_mg_merge_agg,
-        mg_entries,
-        mg_partial_sketches,
-    )
+    from phphll_spark.sketches import CMSFamily, MGFamily, cms_point_estimate, mg_entries
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "ev")
@@ -138,21 +131,11 @@ def test_summary_pipeline_kill_resume_cms_and_mg(spark, tmp_path):
     ).repartition(8).write.mode("overwrite").parquet(src)
 
     def run(ck, fail=None, family="cms"):
-        if family == "cms":
-            return run_summary_pipeline(
-                spark, src, ck,
-                key_cols=[],
-                partials_fn=lambda df: cms_partial_sketches(df, [], "uid", depth=4, width=1024),
-                merge_agg_factory=make_cms_merge_agg,
-                sketch_col="cms",
-                fail_after_splits=fail,
-            )
         return run_summary_pipeline(
             spark, src, ck,
             key_cols=[],
-            partials_fn=lambda df: mg_partial_sketches(df, [], "uid", k=64),
-            merge_agg_factory=make_mg_merge_agg,
-            sketch_col="mg",
+            value_col="uid",
+            family=CMSFamily(depth=4, width=1024) if family == "cms" else MGFamily(k=64),
             fail_after_splits=fail,
         )
 
@@ -184,11 +167,7 @@ def test_summary_pipeline_kill_resume_theta(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from phphll_spark.plans import run_summary_pipeline
-    from phphll_spark.sketches import (
-        make_theta_merge_agg,
-        theta_estimate,
-        theta_partial_sketches,
-    )
+    from phphll_spark.sketches import ThetaFamily, theta_estimate
 
     src = str(tmp_path / "ev_theta")
     spark.createDataFrame(
@@ -199,9 +178,8 @@ def test_summary_pipeline_kill_resume_theta(spark, tmp_path):
         return run_summary_pipeline(
             spark, src, ck,
             key_cols=[],
-            partials_fn=lambda df: theta_partial_sketches(df, [], "uid", k=128),
-            merge_agg_factory=make_theta_merge_agg,
-            sketch_col="theta",
+            value_col="uid",
+            family=ThetaFamily(k=128),
             fail_after_splits=fail,
         )
 
@@ -215,3 +193,48 @@ def test_summary_pipeline_kill_resume_theta(spark, tmp_path):
     # 211 distinct > k=128: estimation regime, estimate within 6/sqrt(k-1)
     est = once.results.select(theta_estimate(F.col("theta")).alias("e")).collect()[0]["e"]
     assert abs(est - 211) <= 6 / (127 ** 0.5) * 211
+
+
+@pytest.fixture(scope="module")
+def typed_keys_path(spark, tmp_path_factory):
+    """600 rows in 6 parquet files keyed by an int and a date column."""
+    path = str(tmp_path_factory.mktemp("typed") / "src")
+    spark.range(0, 600, 1, 6).select(
+        (F.col("id") % 4).cast("int").alias("n"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 3).cast("int")).alias("d"),
+        F.concat(F.lit("u"), (F.col("id") % 97).cast("string")).alias("url"),
+    ).write.parquet(path)
+    return path
+
+
+def test_sketch_pipeline_int_and_date_keys_kill_resume(spark, typed_keys_path, tmp_path):
+    """Non-string keys keep their types through the lineage fold, the
+    checkpoint and the merge, and a killed-then-resumed run matches the
+    direct estimate."""
+    from phphll_spark.functions import hll_count_distinct
+
+    ck = str(tmp_path / "ck")
+    first = run_sketch_pipeline(spark, typed_keys_path, ck, key_cols=["n", "d"], value_col="url", fail_after_splits=3)
+    assert first.processed_splits == 3
+    second = run_sketch_pipeline(spark, typed_keys_path, ck, key_cols=["n", "d"], value_col="url")
+    assert (second.skipped_splits, second.processed_splits) == (3, 3)
+    results = second.results
+    assert [results.schema[k].dataType.simpleString() for k in ("n", "d")] == ["int", "date"]
+    direct = hll_count_distinct(spark.read.parquet(typed_keys_path), ["n", "d"], "url")
+    est = lambda df: {(r["n"], r["d"]): r["approx_distinct"] for r in df.collect()}
+    assert est(results) == est(direct) and len(est(direct)) == 12
+
+
+def test_summary_pipeline_schema_same_before_and_after_first_commit(spark, typed_keys_path, tmp_path):
+    from phphll_spark.plans import run_summary_pipeline
+    from phphll_spark.sketches import CMSFamily
+
+    ck = str(tmp_path / "ck")
+    run = lambda fail=None: run_summary_pipeline(
+        spark, typed_keys_path, ck, key_cols=["n", "d"], value_col="url", family=CMSFamily(), fail_after_splits=fail
+    )
+    empty = run(fail=0)
+    assert empty.processed_splits == 0 and empty.results.count() == 0
+    full = run()
+    assert full.processed_splits == 6
+    assert empty.results.schema == full.results.schema

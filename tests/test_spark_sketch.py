@@ -208,12 +208,13 @@ def test_partial_sketches_multi_matches_separate_folds(spark):
     )
     partials = hll_partial_sketches_multi(df, ["a", "b"], sum_cols=("flag",))
     merge = make_hll_merge_agg()
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("long")
-    def _sum_long(v: pd.Series) -> int:
-        return int(v.sum())
+    # one aggregation takes grouped-agg UDFs of one eval type only
+    @arrow_udf("long")
+    def _sum_long(v: pa.Array) -> int:
+        return pa.compute.sum(v).as_py()
 
     row = (
         partials.agg(

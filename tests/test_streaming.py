@@ -238,7 +238,7 @@ def test_streaming_mg_trending_sink(spark, tmp_path):
     """The generic summary sink with a Misra–Gries summary: streaming
     'trending items' — after all batches the snapshot's counts equal the
     whole stream's exact counts (distinct ≪ capacity → exact regime)."""
-    from phphll_spark.sketches import mg_entries, mg_partial_sketches, make_mg_merge_agg
+    from phphll_spark.sketches import MGFamily, mg_entries
     from phphll_spark.streaming import foreach_batch_summary_sink, read_sketch_table
 
     src = tmp_path / "mg_in"
@@ -254,12 +254,7 @@ def test_streaming_mg_trending_sink(spark, tmp_path):
     stream = spark.readStream.schema("item string").option("maxFilesPerTrigger", "1").parquet(
         f"{src}/*"
     )
-    sink = foreach_batch_summary_sink(
-        [], table,
-        lambda df: mg_partial_sketches(df, [], "item", k=64),
-        make_mg_merge_agg,
-        "mg",
-    )
+    sink = foreach_batch_summary_sink([], "item", table, MGFamily(k=64))
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "mg_ckpt"))
