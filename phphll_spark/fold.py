@@ -32,6 +32,7 @@ is never materialized as pandas objects.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -169,13 +170,15 @@ class ObjectFamily:
 def quantile_udf(cls):
     """Scalar Arrow UDF ``<cls>_quantile(blob, q)`` of an ``ObjectFamily``
     sketch class: ``cls.deserialize(blob).quantile(q)``, NULL where the
-    blob or q is NULL (and where the quantile is NaN)."""
+    blob or q is NULL or q is NaN (and where the quantile is NaN). An
+    out-of-range q is clamped by the sketch."""
 
     def quantile(blobs: pa.Array, qs: pa.Array) -> pa.Array:
         out = np.full(len(blobs), np.nan)
         for i, (blob, q) in enumerate(zip(blobs.to_pylist(), qs.to_pylist())):
-            if blob is not None and q is not None:
-                out[i] = cls.deserialize(blob).quantile(float(q))  # a SQL literal q is a Decimal
+            q = None if q is None else float(q)  # a SQL literal q is a Decimal
+            if blob is not None and q is not None and not math.isnan(q):
+                out[i] = cls.deserialize(blob).quantile(q)
         return pa.array(out, from_pandas=True)
 
     quantile.__name__ = f"{cls.__name__.lower()}_quantile"

@@ -2,12 +2,14 @@
 
 Design for scale:
 
-- MinHash/SimHash are computed in ``mapInArrow`` with *batch-level*
+- Every per-document column (MinHash, SimHash, shingle and window
+  hashes, n-gram repetition, surprisal) is one ``mapInArrow`` pass,
+  ``_append_doc_columns``, over a per-batch kernel with *batch-level*
   vectorization: shingles are overlapping windows straight over the Arrow
   string buffer (zero copies, no per-row Python), hashed in one murmur64a
-  call (reusing the HLL kernel's hash), then per-doc minima / bit-votes
-  are taken with ``np.minimum.reduceat`` / ``np.add.reduceat`` over
-  document boundaries.
+  call (``_window_hashes``, reusing the HLL kernel's hash), then per-doc
+  minima / bit-votes / runs are taken with ``np.minimum.reduceat`` /
+  ``np.add.reduceat`` / one (doc, hash) lexsort over document boundaries.
 - Cosine: the JVM path uses higher-order functions (zip_with + aggregate)
   for plan-native scoring; the blocked path (operators/ann.py) broadcasts
   the query matrix and runs one numpy matmul per Arrow batch.
@@ -15,15 +17,18 @@ Design for scale:
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, DataType, DoubleType, LongType, StructField, StructType
 
 from .. import kernel
+from ..fold import _arrow_to_buffers
+
 
 def _minhash_coeffs(num_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic affine coefficients h_i(x) = (a_i*x + b_i) mod 2^64
@@ -156,18 +161,44 @@ def _word_shingle_windows_from_buffers(
     return starts, ends - starts, counts
 
 
-def _char_shingle_windows(
-    texts: list[bytes], k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """List-of-bytes convenience wrapper (tests / local paths); Spark paths
-    shingle straight over Arrow buffers via _shingle_windows_from_buffers."""
-    doc_lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
-    buf = np.frombuffer(b"".join(texts), dtype=np.uint8) if texts else np.empty(0, np.uint8)
-    doc_off = np.zeros(len(texts), dtype=np.int64)
-    if len(texts):
-        np.cumsum(doc_lens[:-1], out=doc_off[1:])
-    starts, wlens, counts = _shingle_windows_from_buffers(buf, doc_off, doc_lens, k)
-    return buf, starts, wlens, counts
+def _window_hashes(
+    buf: np.ndarray,
+    doc_off: np.ndarray,
+    doc_lens: np.ndarray,
+    k: int,
+    unit: str = "char",
+    *,
+    sub_n: bool = True,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one window → hash step: every k-``unit`` window of every doc,
+    hashed with murmur64a straight out of ``buf``. Returns (uint64
+    hashes, window byte lengths, windows per doc). ``unit``: "char" (k
+    code points) or "word" (k words of NORMALIZED single-space text;
+    ``sub_n`` as in _word_shingle_windows_from_buffers)."""
+    if unit == "char":
+        starts, wlens, counts = _char_shingle_windows_from_buffers(buf, doc_off, doc_lens, k)
+    elif unit == "word":
+        starts, wlens, counts = _word_shingle_windows_from_buffers(buf, doc_off, doc_lens, k, sub_n=sub_n)
+    else:
+        raise ValueError(f"unit must be 'char' or 'word', got {unit!r}")
+    return kernel.murmur64a_windows(buf, starts, wlens), wlens, counts
+
+
+def _doc_hash_runs(hashes: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Runs of equal (doc, hash) pairs, in (doc, hash) order: returns each
+    run's first index into ``hashes``, its doc and its length."""
+    if len(hashes) == 0:  # every doc NULL/empty: no runs
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)
+    doc_ids = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    order = np.lexsort((hashes, doc_ids))
+    sd, sh = doc_ids[order], hashes[order]
+    run_idx = np.flatnonzero(np.concatenate(([True], (np.diff(sd) != 0) | (np.diff(sh) != 0))))
+    return order[run_idx], sd[run_idx], np.diff(np.append(run_idx, len(sd)))
+
+
+def _round4(x: np.ndarray) -> np.ndarray:
+    """Half-up rounding to 4 decimals — the repo's portable floor rule."""
+    return np.floor(x * 1e4 + 0.5) / 1e4
 
 
 def _minhash_from_buffers(
@@ -187,20 +218,11 @@ def _minhash_from_buffers(
     code-point windows) or "word" (k consecutive words of NORMALIZED
     single-space text — the web-dedup shingle; see with_hashed_shingles).
     """
-    window_fn = {
-        "char": _char_shingle_windows_from_buffers,
-        "word": _word_shingle_windows_from_buffers,
-    }[unit]
-    starts, wlens, counts = window_fn(buf, doc_off, doc_lens, shingle_k)
-    n = len(doc_lens)
-    sig = np.full((n, num_hashes), np.iinfo(np.int64).max, dtype=np.int64)
-    if counts.sum() == 0:
-        return sig
-    hashes = kernel.murmur64a_windows(buf, starts, wlens)
+    hashes, _, counts = _window_hashes(buf, doc_off, doc_lens, shingle_k, unit)
+    sig = np.full((len(doc_lens), num_hashes), np.iinfo(np.int64).max, dtype=np.int64)
     a, b = _minhash_coeffs(num_hashes, seed)
-    doc_starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
     nonempty = counts > 0
-    ne_starts = doc_starts[nonempty]
+    ne_starts = (np.cumsum(counts) - counts)[nonempty]
     # uint64 wraparound affine (see _minhash_coeffs), ONE preallocated
     # scratch reused across hash functions — a fresh `a[i]*hashes + b[i]`
     # array per function allocates num_hashes × ~120 MB per batch and
@@ -209,8 +231,7 @@ def _minhash_from_buffers(
     for i in range(num_hashes):
         np.multiply(hashes, a[i], out=hv)
         np.add(hv, b[i], out=hv)
-        mins = np.minimum.reduceat(hv, ne_starts)
-        sig[nonempty, i] = mins.astype(np.int64)
+        sig[nonempty, i] = np.minimum.reduceat(hv, ne_starts).astype(np.int64)
     return sig
 
 
@@ -233,12 +254,8 @@ def _simhash_from_buffers(
     and collapsed 16-worker parallel efficiency to ~0.4. 2D alternatives
     are worse: reduceat(axis=0) over an unpackbits matrix measured 96 s,
     a cumsum-difference segment sum 59 s."""
-    starts, wlens, counts = _char_shingle_windows_from_buffers(buf, doc_off, doc_lens, shingle_k)
-    n = len(doc_lens)
-    out = np.zeros(n, dtype=np.int64)
-    if counts.sum() == 0:
-        return out
-    hashes = kernel.murmur64a_windows(buf, starts, wlens)
+    hashes, _, counts = _window_hashes(buf, doc_off, doc_lens, shingle_k)
+    out = np.zeros(len(doc_lens), dtype=np.int64)
     nonempty = counts > 0
     doc_starts = (np.cumsum(counts) - counts)[nonempty]
     half = counts[nonempty].astype(np.float64) / 2.0
@@ -260,25 +277,50 @@ def simhash64_batch(texts: list[bytes], shingle_k: int = 4) -> np.ndarray:
 
 def _docs_to_buffers(texts: list[bytes]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """List-of-bytes -> shared buffer + per-doc offsets/lens (tests/local)."""
-    doc_lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
-    buf = np.frombuffer(b"".join(texts), dtype=np.uint8) if texts else np.empty(0, np.uint8)
-    doc_off = np.zeros(len(texts), dtype=np.int64)
-    if len(texts):
-        np.cumsum(doc_lens[:-1], out=doc_off[1:])
-    return buf, doc_off, doc_lens
+    buf, offsets = kernel.bytes_to_buffers(texts)
+    return buf, offsets[:-1], np.diff(offsets)
 
 
-def _arrow_doc_buffers(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _arrow_doc_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Arrow string/binary array -> (buf, doc_off, doc_lens), nulls as
     empty docs, no per-row Python and no byte copies."""
-    import pyarrow.compute as pc
-
-    from ..fold import _arrow_to_buffers
-
     if arr.null_count:
         arr = pc.fill_null(arr, "" if str(arr.type).endswith(("string", "utf8")) else b"")
     data, offsets, _ = _arrow_to_buffers(arr)
     return data, offsets[:-1], offsets[1:] - offsets[:-1]
+
+
+def _list_array(counts: np.ndarray, values: np.ndarray) -> pa.Array:
+    """``array<long>`` column: doc i holds the next ``counts[i]`` values."""
+    offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
+
+
+def _append_doc_columns(
+    df: DataFrame,
+    text_col: str,
+    fields: list[tuple[str, DataType]],
+    per_batch: Callable[[np.ndarray, np.ndarray, np.ndarray], list[pa.Array]],
+) -> DataFrame:
+    """The one per-document Arrow pass: append the non-nullable ``fields``
+    to ``df`` with ``per_batch(buf, doc_off, doc_lens)``, the kernel that
+    turns one Arrow batch's ``text_col`` (NULLs as empty docs, see
+    _arrow_doc_buffers) into one array per field, one row per doc
+    (mapInArrow, narrow — no shuffle)."""
+    # an empty batch on the driver: bad parameters fail here, and it gives the Arrow types
+    probe = per_batch(*_docs_to_buffers([]))
+    appended = [pa.field(name, col.type, nullable=False) for (name, _), col in zip(fields, probe)]
+    schema = StructType(list(df.schema.fields) + [StructField(name, t, False) for name, t in fields])
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            cols = per_batch(*_arrow_doc_buffers(rb.column(rb.schema.get_field_index(text_col))))
+            out_schema = pa.schema(list(rb.schema) + appended, metadata=rb.schema.metadata)
+            yield pa.RecordBatch.from_arrays(list(rb.columns) + cols, schema=out_schema)
+
+    return df.mapInArrow(gen, schema=schema)
 
 
 def with_minhash(
@@ -295,25 +337,12 @@ def with_minhash(
     narrow — no shuffle; shingles hashed straight out of Arrow buffers).
     ``unit="word"`` REQUIRES normalized (single-space) text — see
     with_hashed_shingles."""
-    import pyarrow as pa
 
-    fields = list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()), False)]
-    schema = StructType(fields)
+    def per_batch(buf, off, lens):
+        sig = _minhash_from_buffers(buf, off, lens, num_hashes, shingle_k, seed, unit=unit)
+        return [_list_array(np.full(len(lens), num_hashes), sig.ravel())]
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf, off, lens = _arrow_doc_buffers(rb.column(rb.schema.get_field_index(text_col)))
-            sig = _minhash_from_buffers(buf, off, lens, num_hashes, shingle_k, seed, unit=unit)
-            col = pa.ListArray.from_arrays(
-                pa.array(np.arange(rb.num_rows + 1, dtype=np.int32) * num_hashes),
-                pa.array(sig.ravel()),
-            )
-            out_schema = rb.schema.append(pa.field(out_col, col.type, nullable=False))
-            yield pa.RecordBatch.from_arrays(list(rb.columns) + [col], schema=out_schema)
-
-    return df.mapInArrow(gen, schema=schema)
+    return _append_doc_columns(df, text_col, [(out_col, ArrayType(LongType()))], per_batch)
 
 
 def with_hashed_shingles(
@@ -347,40 +376,14 @@ def with_hashed_shingles(
     NB: normalize first (e.g. ``.withColumn(tmp, normalized_text(col))``)
     when content-identity semantics are wanted — operators/dedup.py
     does; word mode REQUIRES normalized (single-space) text."""
-    import pyarrow as pa
 
-    window_fn = {
-        "char": _char_shingle_windows_from_buffers,
-        "word": _word_shingle_windows_from_buffers,
-    }[unit]
-    fields = list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()), False)]
-    schema = StructType(fields)
+    def per_batch(buf, off, lens):
+        hashes, _, counts = _window_hashes(buf, off, lens, shingle_k, unit)
+        hashes = hashes.astype(np.int64)  # sorted as the longs Spark holds
+        first, run_doc, _ = _doc_hash_runs(hashes, counts)  # within-doc duplicates dropped
+        return [_list_array(np.bincount(run_doc, minlength=len(lens)), hashes[first])]
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf, off, lens = _arrow_doc_buffers(rb.column(rb.schema.get_field_index(text_col)))
-            starts, wlens, counts = window_fn(buf, off, lens, shingle_k)
-            n = rb.num_rows
-            if counts.sum() == 0:
-                uniq = np.empty(0, dtype=np.int64)
-                new_counts = np.zeros(n, dtype=np.int64)
-            else:
-                hashes = kernel.murmur64a_windows(buf, starts, wlens).astype(np.int64)
-                doc_ids = np.repeat(np.arange(n, dtype=np.int64), counts)
-                # sort by (doc, hash) then drop within-doc duplicates
-                order = np.lexsort((hashes, doc_ids))
-                sd, sh = doc_ids[order], hashes[order]
-                keep = np.concatenate(([True], (np.diff(sd) != 0) | (np.diff(sh) != 0)))
-                sd, uniq = sd[keep], sh[keep]
-                new_counts = np.bincount(sd, minlength=n).astype(np.int64)
-            offsets = np.concatenate(([0], np.cumsum(new_counts))).astype(np.int32)
-            col = pa.ListArray.from_arrays(pa.array(offsets), pa.array(uniq))
-            out_schema = rb.schema.append(pa.field(out_col, col.type, nullable=False))
-            yield pa.RecordBatch.from_arrays(list(rb.columns) + [col], schema=out_schema)
-
-    return df.mapInArrow(gen, schema=schema)
+    return _append_doc_columns(df, text_col, [(out_col, ArrayType(LongType()))], per_batch)
 
 
 def with_word_window_hashes(
@@ -408,29 +411,12 @@ def with_word_window_hashes(
     ``F.concat_ws(" ", tokens)`` of the whitespace-split token array) so
     word index == token index and window bytes == the space-joined token
     tuple."""
-    import pyarrow as pa
 
-    fields = list(df.schema.fields) + [StructField(out_col, ArrayType(LongType()), False)]
-    schema = StructType(fields)
+    def per_batch(buf, off, lens):
+        hashes, _, counts = _window_hashes(buf, off, lens, n, "word", sub_n=False)
+        return [_list_array(counts, hashes.astype(np.int64))]
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf, off, lens = _arrow_doc_buffers(rb.column(rb.schema.get_field_index(text_col)))
-            starts, wlens, counts = _word_shingle_windows_from_buffers(
-                buf, off, lens, n, sub_n=False
-            )
-            if counts.sum() == 0:
-                hashes = np.empty(0, dtype=np.int64)
-            else:
-                hashes = kernel.murmur64a_windows(buf, starts, wlens).astype(np.int64)
-            offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
-            col = pa.ListArray.from_arrays(pa.array(offsets), pa.array(hashes))
-            out_schema = rb.schema.append(pa.field(out_col, col.type, nullable=False))
-            yield pa.RecordBatch.from_arrays(list(rb.columns) + [col], schema=out_schema)
-
-    return df.mapInArrow(gen, schema=schema)
+    return _append_doc_columns(df, text_col, [(out_col, ArrayType(LongType()))], per_batch)
 
 
 def with_ngram_repetition(
@@ -459,49 +445,22 @@ def with_ngram_repetition(
 
     Vectorized mapInArrow: word windows + one murmur pass + a
     (doc, hash) lexsort → run-length stats; no per-row Python."""
-    import pyarrow as pa
 
-    fields = list(df.schema.fields) + [
-        StructField(out_top, DoubleType(), False),
-        StructField(out_dup, DoubleType(), False),
-    ]
-    schema = StructType(fields)
+    def per_batch(buf, off, lens):
+        hashes, wlens, counts = _window_hashes(buf, off, lens, n, "word")
+        first, run_doc, run_counts = _doc_hash_runs(hashes, counts)
+        coverage = (run_counts * wlens[first]).astype(np.float64)  # same hash ⇒ same length
+        top = np.zeros(len(lens), dtype=np.float64)
+        dup = np.zeros(len(lens), dtype=np.float64)
+        np.maximum.at(top, run_doc, coverage)
+        dup_runs = run_counts > 1
+        np.add.at(dup, run_doc[dup_runs], coverage[dup_runs])
+        nz = lens > 0
+        top[nz] = _round4(np.minimum(top[nz] / lens[nz], 1.0))
+        dup[nz] = _round4(np.minimum(dup[nz] / lens[nz], 1.0))
+        return [pa.array(top), pa.array(dup)]
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf, off, lens = _arrow_doc_buffers(rb.column(rb.schema.get_field_index(text_col)))
-            starts, wlens, counts = _word_shingle_windows_from_buffers(buf, off, lens, n)
-            nrows = rb.num_rows
-            top = np.zeros(nrows, dtype=np.float64)
-            dup = np.zeros(nrows, dtype=np.float64)
-            if counts.sum():
-                hashes = kernel.murmur64a_windows(buf, starts, wlens)
-                doc_ids = np.repeat(np.arange(nrows, dtype=np.int64), counts)
-                order = np.lexsort((hashes, doc_ids))
-                sd, sh_, sl = doc_ids[order], hashes[order], wlens[order]
-                run_start = np.concatenate(([True], (np.diff(sd) != 0) | (np.diff(sh_) != 0)))
-                run_idx = np.flatnonzero(run_start)
-                run_counts = np.diff(np.concatenate((run_idx, [len(sd)])))
-                run_doc = sd[run_idx]
-                run_len = sl[run_idx]  # same hash ⇒ same bytes ⇒ same length
-                coverage = run_counts * run_len
-                np.maximum.at(top, run_doc, coverage.astype(np.float64))
-                dup_runs = run_counts > 1
-                np.add.at(dup, run_doc[dup_runs], coverage[dup_runs].astype(np.float64))
-                nz = lens > 0
-                top[nz] = np.floor(np.minimum(top[nz] / lens[nz], 1.0) * 1e4 + 0.5) / 1e4
-                dup[nz] = np.floor(np.minimum(dup[nz] / lens[nz], 1.0) * 1e4 + 0.5) / 1e4
-                top[~nz] = 0.0
-                dup[~nz] = 0.0
-            cols = list(rb.columns) + [pa.array(top), pa.array(dup)]
-            out_schema = rb.schema.append(pa.field(out_top, pa.float64(), nullable=False)).append(
-                pa.field(out_dup, pa.float64(), nullable=False)
-            )
-            yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
-
-    return df.mapInArrow(gen, schema=schema)
+    return _append_doc_columns(df, text_col, [(out_top, DoubleType()), (out_dup, DoubleType())], per_batch)
 
 
 def unigram_vocab(
@@ -550,60 +509,34 @@ def with_unigram_surprisal(
     shingle machinery, one murmur sweep, one ``searchsorted`` lookup per
     batch — no per-row Python, no join, no shuffle. Empty docs score
     0.0; rounded half-up to 4 (portable rule)."""
-    import pyarrow as pa
-
     vhash, vcount, total = vocab
     if total <= 0:
         total = 1
-    logp = np.log(vcount.astype(np.float64) / total)
-    oov_logp = float(np.log(oov_count / total))
-    fields = list(df.schema.fields) + [StructField(out_col, DoubleType(), False)]
-    schema = StructType(fields)
+    # ln p per vocab entry, then the out-of-vocab ln p at index len(vhash)
+    logp = np.append(np.log(vcount.astype(np.float64) / total), np.log(oov_count / total))
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf, off, lens = _arrow_doc_buffers(rb.column(rb.schema.get_field_index(text_col)))
-            starts, wlens, counts = _word_shingle_windows_from_buffers(buf, off, lens, 1)
-            n = rb.num_rows
-            score = np.zeros(n, dtype=np.float64)
-            if counts.sum():
-                hv = kernel.murmur64a_windows(buf, starts, wlens)
-                pos = np.searchsorted(vhash, hv)
-                pos_c = np.minimum(pos, max(len(vhash) - 1, 0))
-                hit = (len(vhash) > 0) & (vhash[pos_c] == hv) if len(vhash) else np.zeros(len(hv), bool)
-                tok_lp = np.where(hit, logp[pos_c] if len(vhash) else 0.0, oov_logp)
-                doc_ids = np.repeat(np.arange(n, dtype=np.int64), counts)
-                sums = np.bincount(doc_ids, weights=-tok_lp, minlength=n)
-                nz = counts > 0
-                score[nz] = sums[nz] / counts[nz]
-                score = np.floor(score * 1e4 + 0.5) / 1e4
-            col = pa.array(score)
-            out_schema = rb.schema.append(pa.field(out_col, pa.float64(), nullable=False))
-            yield pa.RecordBatch.from_arrays(list(rb.columns) + [col], schema=out_schema)
+    def per_batch(buf, off, lens):
+        hashes, _, counts = _window_hashes(buf, off, lens, 1, "word")
+        pos = np.searchsorted(vhash, hashes)
+        hit = pos < len(vhash)
+        hit[hit] = vhash[pos[hit]] == hashes[hit]
+        doc_ids = np.repeat(np.arange(len(lens), dtype=np.int64), counts)
+        sums = np.bincount(doc_ids, weights=-logp[np.where(hit, pos, len(vhash))], minlength=len(lens))
+        score = np.zeros(len(lens), dtype=np.float64)
+        nz = counts > 0
+        score[nz] = sums[nz] / counts[nz]
+        return [pa.array(_round4(score))]
 
-    return df.mapInArrow(gen, schema=schema)
+    return _append_doc_columns(df, text_col, [(out_col, DoubleType())], per_batch)
 
 
 def with_simhash(df: DataFrame, text_col: str, *, shingle_k: int = 4, out_col: str = "simhash") -> DataFrame:
     """Append a 64-bit SimHash fingerprint column (narrow, vectorized)."""
-    import pyarrow as pa
 
-    fields = list(df.schema.fields) + [StructField(out_col, LongType(), False)]
-    schema = StructType(fields)
+    def per_batch(buf, off, lens):
+        return [pa.array(_simhash_from_buffers(buf, off, lens, shingle_k))]
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf, off, lens = _arrow_doc_buffers(rb.column(rb.schema.get_field_index(text_col)))
-            fp = _simhash_from_buffers(buf, off, lens, shingle_k)
-            col = pa.array(fp)
-            out_schema = rb.schema.append(pa.field(out_col, col.type, nullable=False))
-            yield pa.RecordBatch.from_arrays(list(rb.columns) + [col], schema=out_schema)
-
-    return df.mapInArrow(gen, schema=schema)
+    return _append_doc_columns(df, text_col, [(out_col, LongType())], per_batch)
 
 
 # ---------------------------------------------------------------------------

@@ -188,7 +188,7 @@ def char_shingles(col: Column | str, k: int = 3) -> Column:
     Native: sequence + transform + substring, no UDF.
 
     A nonempty doc shorter than k is its own single shingle — the same
-    rule the MinHash signature path uses (_shingle_windows_from_buffers),
+    rule the MinHash signature path uses (_char_shingle_windows_from_buffers),
     so LSH candidates and exact verification agree on short docs."""
     c = normalized_text(col)
     n = F.length(c)

@@ -25,7 +25,6 @@ from __future__ import annotations
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -312,13 +311,15 @@ def cosine_all_pairs_blocked(
         ]
     )
 
-    def gemm(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                ia = np.frombuffer(row.ids_a, dtype=np.int64)
-                ib = np.frombuffer(row.ids_b, dtype=np.int64)
-                A = np.frombuffer(row.mat_a, dtype=np.float64).reshape(row.n_a, -1)
-                Bm = np.frombuffer(row.mat_b, dtype=np.float64).reshape(row.n_b, -1)
+    out_arrow = to_arrow_schema(out_schema)
+
+    def gemm(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            for row in rb.to_pylist():
+                ia = np.frombuffer(row["ids_a"], dtype=np.int64)
+                ib = np.frombuffer(row["ids_b"], dtype=np.int64)
+                A = np.frombuffer(row["mat_a"], dtype=np.float64).reshape(row["n_a"], -1)
+                Bm = np.frombuffer(row["mat_b"], dtype=np.float64).reshape(row["n_b"], -1)
                 # floor-based half-up rounding — the repo's portable rule
                 # (np.round is half-to-even; DuckDB ROUND is half-away;
                 # floor(x*1e4+0.5)/1e4 is bit-identical IEEE on both sides)
@@ -330,14 +331,16 @@ def cosine_all_pairs_blocked(
                 lo = np.minimum(pa_, pb_)
                 hi = np.maximum(pa_, pb_)
                 keep = lo < hi  # drops self-pairs; same-block dups handled below
-                out = pd.DataFrame(
-                    {"id_a": lo[keep], "id_b": hi[keep], "cosine_sim": S[ii, jj][keep]}
-                )
-                if row.block_a == row.block_b:
-                    out = out.drop_duplicates(["id_a", "id_b"])
-                yield out
+                lo, hi, sim = lo[keep], hi[keep], S[ii, jj][keep]
+                if row["block_a"] == row["block_b"]:
+                    # (i, j) and (j, i) are one pair: keep its first occurrence
+                    _, first = np.unique(np.stack((lo, hi), axis=1), axis=0, return_index=True)
+                    first.sort()
+                    lo, hi, sim = lo[first], hi[first], sim[first]
+                cols = [pa.array(lo), pa.array(hi), pa.array(sim)]
+                yield pa.RecordBatch.from_arrays(cols, schema=out_arrow)
 
-    return joined.mapInPandas(gemm, schema=out_schema)
+    return joined.mapInArrow(gemm, schema=out_schema)
 
 
 def sign_lsh_multitable(

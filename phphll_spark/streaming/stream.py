@@ -26,13 +26,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from .. import kernel
 from ..fold import merge, partial_sketches
@@ -186,7 +180,7 @@ def stateful_sessions(
     """
     out_schema = StructType(
         [
-            StructField(user_col, StringType(), False),
+            stream_df.schema[user_col],
             StructField("session_start", LongType(), False),  # epoch seconds
             StructField("session_end", LongType(), False),
             StructField("n_events", LongType(), False),
@@ -278,7 +272,7 @@ def stateful_sketch_counts(
     m = kernel.m_for_p(p)
     out_schema = StructType(
         [
-            StructField(key, StringType(), False),
+            stream_df.schema[key],
             StructField("approx_distinct", LongType(), False),
             StructField("rows_seen", LongType(), False),
         ]

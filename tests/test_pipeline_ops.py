@@ -223,6 +223,16 @@ def test_dedup_minhash_word_shingles(spark, neardup_docs):
         assert r["jaccard_sim"] >= 0.5
 
 
+def test_shingle_unit_rejected_on_driver(spark, assert_no_job):
+    """A bad ``unit`` fails when the column is defined, not in a task."""
+    from phphll_spark.functions.similarity import with_hashed_shingles
+
+    df = spark.createDataFrame([("a b",)], "text string")
+    for fn in (with_minhash, with_hashed_shingles):
+        with assert_no_job(), pytest.raises(ValueError, match="unit must be"):
+            fn(df, "text", unit="byte")
+
+
 def test_ngram_jaccard_exact_baseline(spark, neardup_docs):
     got = {
         (r["id_a"], r["id_b"])

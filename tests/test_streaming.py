@@ -86,6 +86,36 @@ def test_stateful_sketch_counts(spark, stream_dir, tmp_path):
     assert total_rows["en"] == 250  # 100 + 150 raw rows folded into state
 
 
+
+def test_stateful_sketch_counts_int_key(spark, tmp_path):
+    """The key column keeps its input type (an int key failed to convert
+    when the output schema typed every key as a string)."""
+    src = tmp_path / "int_in"
+    src.mkdir()
+    for n, rows in (("b1", [(1, f"u{i}") for i in range(30)]), ("b2", [(2, "x"), (1, "u99")])):
+        spark.createDataFrame(rows, "k int, url string").coalesce(1).write.parquet(str(src / n))
+    stream = (
+        spark.readStream.schema("k int, url string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{src}/*")
+    )
+    out = stateful_sketch_counts(stream, "k", "url")
+    assert out.schema["k"].dataType == stream.schema["k"].dataType
+    q = (
+        out.writeStream.format("memory")
+        .queryName("stateful_counts_int")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt_int"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    latest = {}
+    for r in spark.sql("SELECT * FROM stateful_counts_int").collect():
+        latest[r["k"]] = max(latest.get(r["k"], 0), r["rows_seen"])
+    assert latest == {1: 31, 2: 1}
+
 def test_windowed_sketch_sink_handles_late_data(spark, tmp_path):
     """Event-time tumbling windows with a LATE row arriving two
     micro-batches after its window: the old window's sketch absorbs it
@@ -335,3 +365,44 @@ def test_streaming_daily_users_eq_query(spark):
     rows = entry_mod.q_streaming_daily_users_eq(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0
     assert all(r["stream_eq_batch"] and r["within_bound"] for r in rows)
+
+
+def test_stateful_sessions_int_user(spark, tmp_path):
+    """The user column keeps its input type (an int user failed to convert
+    when the output schema typed it as a string)."""
+    from datetime import datetime, timedelta
+
+    from phphll_spark.streaming import stateful_sessions
+
+    t0 = datetime(2024, 9, 1, 0, 0, 0)
+    sec = lambda s: t0 + timedelta(seconds=s)
+    src = tmp_path / "int_sess_in"
+    src.mkdir()
+    b1 = [(sec(0), 7), (sec(60), 7), (sec(5000), 7)]
+    b2 = [(sec(100000), 8)]
+    for n, rows in (("b1", b1), ("b2", b2)):
+        spark.createDataFrame(rows, "ts timestamp, uid int").coalesce(1).write.parquet(str(src / n))
+    stream = (
+        spark.readStream.schema("ts timestamp, uid int")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{src}/*")
+        .withWatermark("ts", "0 seconds")
+    )
+    out = stateful_sessions(stream, "uid", "ts", gap_seconds=1800)
+    assert out.schema["uid"].dataType == stream.schema["uid"].dataType
+    q = (
+        out.writeStream.format("memory")
+        .queryName("int_sessions_out")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "int_sess_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = {
+        (r["uid"], r["session_start"], r["session_end"], r["n_events"])
+        for r in spark.sql("SELECT * FROM int_sessions_out").collect()
+    }
+    e = lambda s: int(sec(s).timestamp())
+    assert {(7, e(0), e(60), 2), (7, e(5000), e(5000), 1)} <= rows

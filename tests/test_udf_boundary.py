@@ -1,6 +1,7 @@
 """The Arrow UDF boundary of the sketch modules: no ``pandas_udf`` in
-them, ``merge_agg`` a grouped-agg Arrow UDF, the scalar UDFs at their
-NULL/NaN edges, and every merge path giving the same blobs."""
+them (and no pandas at all in the similarity and ANN passes),
+``merge_agg`` a grouped-agg Arrow UDF, the scalar UDFs at their NULL/NaN
+edges, and every merge path giving the same blobs."""
 
 import ast
 import hashlib
@@ -33,11 +34,27 @@ _PKG = pathlib.Path(__file__).resolve().parents[1] / "phphll_spark"
     ids=lambda p: str(p.relative_to(_PKG)),
 )
 def test_sketch_module_defines_no_pandas_udf(path):
+    assert "pandas_udf" not in _names(ast.parse(path.read_text()))
+
+
+@pytest.mark.parametrize(
+    "path",
+    [_PKG / "functions" / "similarity.py", _PKG / "operators" / "ann.py"],
+    ids=lambda p: str(p.relative_to(_PKG)),
+)
+def test_arrow_pass_module_has_no_pandas(path):
     tree = ast.parse(path.read_text())
+    modules = {a.name for n in ast.walk(tree) if isinstance(n, ast.Import) for a in n.names}
+    modules |= {n.module for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) and n.module}
+    assert not {"pandas_udf", "mapInPandas"} & _names(tree)
+    assert "pandas" not in {m.split(".")[0] for m in modules}
+
+
+def _names(tree) -> set[str]:
     names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
     names |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
     names |= {a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) for a in n.names}
-    assert "pandas_udf" not in names
+    return names
 
 
 @pytest.mark.parametrize(
@@ -138,8 +155,10 @@ def test_quantile_of_null_q_is_null(spark, name):
     sketch, quantile, cls = _QUANTILES[name]
     src = spark.createDataFrame([(float(i),) for i in range(100)], "x double")
     blob = bytes(sketch(src, [], "x").collect()[0][name])
-    df = spark.createDataFrame([(blob, 0.5), (blob, None), (None, None)], "s binary, q double")
-    assert _col(df, quantile("s", "q")) == [cls.deserialize(blob).quantile(0.5), None, None]
+    df = spark.createDataFrame(
+        [(blob, 0.5), (blob, None), (None, None), (blob, float("nan"))], "s binary, q double"
+    )
+    assert _col(df, quantile("s", "q")) == [cls.deserialize(blob).quantile(0.5), None, None, None]
 
 
 # family -> (*_sketch, *_partial_sketches); default parameters, as SQL registers them
