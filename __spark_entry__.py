@@ -389,9 +389,10 @@ def q_dedup_span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries its doc's total removed-token count and the md5 of the
     rewritten document, which the oracle recomputes by filtering
     span-covered tokens in SQL. Same grain (one row per span), no extra
-    driver slot. hasher='md5' pins Spark and DuckDB to identical window
-    hashes; the operator's default ('murmur', zero-copy Arrow windows) is
-    the scale path, pinned span-equivalent in tests/test_pipeline_ops.py.
+    driver slot. The query runs the production path (murmur64 of
+    zero-copy Arrow windows); the oracle hashes its windows with md5, so
+    the two agree up to 64-bit murmur collisions, and only spans and
+    per-doc removal digests are exported, never the hashes.
     """
     from phphll_spark.operators import duplicated_ngram_spans, remove_duplicated_spans
     from phphll_spark.operators._cache import register as _reg, release_cached
@@ -401,7 +402,7 @@ def q_dedup_span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spans feed BOTH the export and the removal join — persist so the
     # window-hash count pass runs once (released by the next operator)
     spans = _reg(
-        duplicated_ngram_spans(docs, "doc_id", "text", n=20, hasher="md5").persist()
+        duplicated_ngram_spans(docs, "doc_id", "text", n=20).persist()
     )
     removal = remove_duplicated_spans(docs, "doc_id", "text", n=20, spans=spans)
     return spans.join(

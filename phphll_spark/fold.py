@@ -185,13 +185,36 @@ def quantile_udf(cls):
     return arrow_udf(DoubleType())(quantile)
 
 
+def _fold_groups(batches: Iterator[pa.RecordBatch], keys: list[str], value_col: str, family) -> dict:
+    """``{key tuple: [state, rows]}`` of one partition: each group's folded
+    state and its row count, NULL-value rows included. Every group present
+    gets a state, even if all of its values are NULL (an empty sketch), and
+    NULL keys form one group."""
+    acc: dict = {}
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        prepared, valid = family.batch(rb.column(rb.schema.get_field_index(value_col)))
+        if keys:
+            codes, groups = _arrow_group_codes(rb, keys)
+        else:
+            codes, groups = np.zeros(rb.num_rows, dtype=np.int64), [()]
+        for g, n in zip(groups, np.bincount(codes, minlength=len(groups)).tolist()):
+            if g in acc:
+                acc[g][1] += n
+            else:
+                acc[g] = [family.empty(), n]
+        for code, sel in _segments(codes if valid is None else codes[valid]):
+            entry = acc[groups[code]]
+            entry[0] = family.fold(entry[0], prepared, sel)
+    return acc
+
+
 def partial_sketches(df: DataFrame, keys: list[str], value_col: str, family) -> DataFrame:
     """Per-partition, per-group partial sketches via ``mapInArrow``.
 
     Output schema: ``keys..., <family.column> binary`` — one row per
-    (input partition, group). Every group present in the partition gets
-    a sketch, even if all of its values are NULL (an empty sketch), and
-    NULL keys form one group per partition."""
+    (input partition, group) of ``_fold_groups``."""
     family.empty()  # bad parameters fail here, on the driver
     out_schema = StructType(
         [df.schema[k] for k in keys] + [StructField(family.column, BinaryType(), False)]
@@ -199,26 +222,11 @@ def partial_sketches(df: DataFrame, keys: list[str], value_col: str, family) -> 
     arrow_schema = to_arrow_schema(out_schema)
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            prepared, valid = family.batch(rb.column(rb.schema.get_field_index(value_col)))
-            if keys:
-                codes, groups = _arrow_group_codes(rb, keys)
-            else:
-                codes, groups = np.zeros(rb.num_rows, dtype=np.int64), [()]
-            for g in groups:
-                if g not in acc:
-                    acc[g] = family.empty()
-            for code, sel in _segments(codes if valid is None else codes[valid]):
-                g = groups[code]
-                acc[g] = family.fold(acc[g], prepared, sel)
+        acc = _fold_groups(batches, keys, value_col, family)
         if not acc:
             return
-        rows = list(acc)
-        out = {k: [r[i] for r in rows] for i, k in enumerate(keys)}
-        out[family.column] = [family.serialize(acc[r]) for r in rows]
+        out = {k: [g[i] for g in acc] for i, k in enumerate(keys)}
+        out[family.column] = [family.serialize(state) for state, _ in acc.values()]
         yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
 
     return df.select(*keys, value_col).mapInArrow(fold, schema=out_schema)

@@ -277,29 +277,11 @@ def hll_nonzero_registers(blobs: pa.Array) -> pa.Array:
 # DataFrame-level operators
 # ---------------------------------------------------------------------------
 
-def hll_sketch(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    p: int = HLL_P_DEFAULT,
-    *,
-    pre_repartition: int | None = None,
-) -> DataFrame:
+def hll_sketch(df: DataFrame, keys: list[str], value_col: str, p: int = HLL_P_DEFAULT) -> DataFrame:
     """keys... + merged ``sketch`` per group (partial fold + sketch-only
-    shuffle + max-merge).
-
-    ``pre_repartition=n`` first hash-partitions rows by the group keys so
-    each partition's accumulator dict only holds its own groups — use when
-    group cardinality is high relative to executor memory.
-    """
+    shuffle + max-merge)."""
     family = HLLFamily(p)
-    return merge(_partials(df, keys, value_col, family, pre_repartition), keys, family)
-
-
-def _partials(df: DataFrame, keys: list[str], value_col: str, family: HLLFamily, pre_repartition: int | None):
-    if pre_repartition and keys:
-        df = df.repartition(pre_repartition, *[F.col(k) for k in keys])
-    return partial_sketches(df, keys, value_col, family)
+    return merge(partial_sketches(df, keys, value_col, family), keys, family)
 
 
 def hll_count_distinct(
@@ -309,7 +291,6 @@ def hll_count_distinct(
     p: int = HLL_P_DEFAULT,
     *,
     alias: str = "approx_distinct",
-    pre_repartition: int | None = None,
 ) -> DataFrame:
     """APPROX COUNT DISTINCT of ``value_col`` per group — the engine's
     flagship operator (the distributed pfAdd+pfCount+pfMerge pipeline).
@@ -317,7 +298,7 @@ def hll_count_distinct(
     the plan has two Python operators: the fold and the merge."""
     family = HLLFamily(p)
     finish = (StructField(alias, LongType(), False), _estimate)
-    return merge(_partials(df, keys, value_col, family, pre_repartition), keys, family, finish)
+    return merge(partial_sketches(df, keys, value_col, family), keys, family, finish)
 
 
 def _estimate(regs: np.ndarray | None) -> int:

@@ -113,7 +113,6 @@ def duplicated_ngram_spans(
     *,
     n: int = 50,
     min_count: int = 2,
-    hasher: str = "murmur",
 ) -> DataFrame:
     """Exact-substring duplicate spans — the 'dedup by repeated 50-token
     substring' stage of Lee et al. 2022 (Deduplicating Training Data Makes
@@ -130,44 +129,21 @@ def duplicated_ngram_spans(
     key; span merging is a per-document window bounded by document
     length, never by corpus size.
 
-    ``hasher`` picks the window-hash implementation — identical spans
-    either way (up to 64-bit murmur collisions; equivalence pinned in
-    tests/test_pipeline_ops.py):
-
-    - ``"murmur"`` (default, the scale path): zero-copy murmur64 of the
-      n-word windows straight out of the Arrow buffer
-      (``with_word_window_hashes``) — no per-window string allocation,
-      no ~n× byte re-materialization (VERDICT r04 #1).
-    - ``"md5"``: JVM ``md5(concat_ws(...))`` per window — each token's
-      bytes re-materialize in ~n window strings; kept because md5 is
-      expressible in ANSI SQL, so the oracle-paired driver query can
-      re-derive the exact same hashes independently.
+    Windows are hashed with a zero-copy murmur64 of the n-word windows
+    straight out of the Arrow buffer (``with_word_window_hashes``): no
+    per-window string allocation, no ~n× byte re-materialization. Spans
+    equal those of exact window text up to 64-bit collisions (pinned
+    against a pure-Python reference in tests/test_pipeline_ops.py).
     """
-    # project the token array ONCE: inlining the split into the per-window
-    # lambda makes Catalyst re-split the text for every window (measured
-    # 3.3x slower at sf0.1)
-    pre = df.select(
+    joined = df.select(
         F.col(id_col),
-        F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "").alias("_ws"),
+        F.concat_ws(
+            " ", F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
+        ).alias("_njoin"),
     )
-    words = F.col("_ws")
-    if hasher == "murmur":
-        joined = pre.select(F.col(id_col), F.concat_ws(" ", words).alias("_njoin"))
-        grams = with_word_window_hashes(joined, "_njoin", n=n).select(
-            F.col(id_col), F.posexplode("window_hashes").alias("pos", "_h")
-        )
-    elif hasher == "md5":
-        idxs = F.when(
-            F.size(words) >= n, F.sequence(F.lit(0), F.size(words) - n)
-        ).otherwise(F.array().cast("array<int>"))
-        grams = pre.select(
-            F.col(id_col),
-            F.posexplode(
-                F.transform(idxs, lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, n))))
-            ).alias("pos", "_h"),
-        )
-    else:
-        raise ValueError(f"unknown hasher {hasher!r}: expected 'murmur' or 'md5'")
+    grams = with_word_window_hashes(joined, "_njoin", n=n).select(
+        F.col(id_col), F.posexplode("window_hashes").alias("pos", "_h")
+    )
     dup_h = (
         grams.groupBy("_h").agg(F.count("*").alias("_c")).filter(F.col("_c") >= min_count)
     )
@@ -194,7 +170,6 @@ def remove_duplicated_spans(
     *,
     n: int = 50,
     min_count: int = 2,
-    hasher: str = "murmur",
     spans: DataFrame | None = None,
 ) -> DataFrame:
     """The removal half of the Lee et al. exact-substring stage: cut every
@@ -218,9 +193,7 @@ def remove_duplicated_spans(
     removal (the driver's dedup_span_docs does both).
     """
     if spans is None:
-        spans = duplicated_ngram_spans(
-            df, id_col, text_col, n=n, min_count=min_count, hasher=hasher
-        )
+        spans = duplicated_ngram_spans(df, id_col, text_col, n=n, min_count=min_count)
     spans = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )

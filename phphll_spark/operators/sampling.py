@@ -68,18 +68,28 @@ def cap_per_stratum(
     (partition, window key) — the salted phase is the explicit,
     engine-portable guarantee that no single task ever ranks a whole
     head stratum, and the group-limit pushdown makes both phases cheap."""
+    return _salted_top_k(df, id_col, strata_col, max_rows, salt_buckets)
+
+
+def _salted_top_k(
+    df: DataFrame, id_col: str, strata_col: str, k: int, salt_buckets: int, order: tuple[str, ...] = ()
+) -> DataFrame:
+    """The first ``k`` rows per stratum by ``order`` columns, then id, in
+    cap_per_stratum's two phases: a top-k within (stratum,
+    xxhash64(id) % ``salt_buckets``), then an exact top-k of those
+    candidates within the stratum. ``order`` columns are dropped."""
     from pyspark.sql import Window
 
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    w1 = Window.partitionBy(strata_col, "_salt").orderBy(F.col(id_col))
-    w2 = Window.partitionBy(strata_col).orderBy(F.col(id_col))
+    by = [F.col(c) for c in (*order, id_col)]
+    w1 = Window.partitionBy(strata_col, "_salt").orderBy(*by)
+    w2 = Window.partitionBy(strata_col).orderBy(*by)
     return (
-        df.withColumn("_salt", salt)
+        df.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
         .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= max_rows)
+        .filter(F.col("_rn") <= k)
         .withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= max_rows)
-        .drop("_rn", "_salt")
+        .filter(F.col("_rn") <= k)
+        .drop("_rn", "_salt", *order)
     )
 
 
@@ -102,21 +112,8 @@ def sample_k_per_stratum(
     top-k, then exact re-rank of the bounded candidates), ordered by the
     hash instead of the id; ``id_col`` must be unique (ties broken by
     id)."""
-    from pyspark.sql import Window
-
     order = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
-    sb = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    w1 = Window.partitionBy(strata_col, "_salt").orderBy(F.col("_ord"), F.col(id_col))
-    w2 = Window.partitionBy(strata_col).orderBy(F.col("_ord"), F.col(id_col))
-    return (
-        df.withColumn("_ord", order)
-        .withColumn("_salt", sb)
-        .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k)
-        .withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_salt", "_ord")
-    )
+    return _salted_top_k(df.withColumn("_ord", order), id_col, strata_col, k, salt_buckets, ("_ord",))
 
 
 def weighted_sample_k_per_stratum(
@@ -139,8 +136,6 @@ def weighted_sample_k_per_stratum(
     Implemented as -ln(u)/w ascending (same order as u^(1/w) descending,
     numerically safer); rows with weight ≤ 0/NULL never selected. Same
     salted two-phase top-k shape as cap_per_stratum; ``id_col`` unique."""
-    from pyspark.sql import Window
-
     # u in (0,1): 52-bit mantissa from md5 — reproducible everywhere
     u = (
         F.conv(F.substring(F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))), 1, 13), 16, 10)
@@ -151,19 +146,8 @@ def weighted_sample_k_per_stratum(
     key = F.when(
         w > 0, -F.log(F.greatest(u, F.lit(1e-300))) / w
     ).otherwise(F.lit(float("inf")))
-    sb = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    w1 = Window.partitionBy(strata_col, "_salt").orderBy(F.col("_key"), F.col(id_col))
-    w2 = Window.partitionBy(strata_col).orderBy(F.col("_key"), F.col(id_col))
-    return (
-        df.withColumn("_key", key)
-        .filter(F.col("_key") != float("inf"))
-        .withColumn("_salt", sb)
-        .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k)
-        .withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_salt", "_key")
-    )
+    keyed = df.withColumn("_key", key).filter(F.col("_key") != float("inf"))
+    return _salted_top_k(keyed, id_col, strata_col, k, salt_buckets, ("_key",))
 
 
 def cap_tokens_per_stratum(

@@ -17,11 +17,14 @@ designed for kill/resume at 10^12-row scale:
   set; only missing splits are re-scanned. Correct because merge is
   associative/commutative/idempotent (hyperloglog.c:1038-1077).
 - Lineage rows carry (split_id, row_count, register_checksum, wall_time_s)
-  per FIXTURES.md §5 for audit/metrics.
+  per FIXTURES.md §5 for audit/metrics, for every sketch family: the
+  partials come out of the same fold loop as ``fold.partial_sketches``
+  (``fold._fold_groups``), grouped by split as well as by key.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -29,9 +32,10 @@ import uuid
 from dataclasses import dataclass, replace
 from typing import Iterator
 
-import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -41,25 +45,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import codec, kernel
-from ..fold import merge, partial_sketches
+from ..fold import _fold_groups, merge
 from ..functions.sketch import HLLFamily, hll_count_sketch
 from ..kernel import HLL_P_DEFAULT
 
 MANIFEST = "manifest.json"
-
-
-def _partials_schema(key_fields: list[StructField]) -> StructType:
-    return StructType(
-        [StructField("split_id", StringType(), False)]
-        + key_fields
-        + [
-            StructField("sketch", BinaryType(), False),
-            StructField("row_count", LongType(), False),
-            StructField("register_checksum", StringType(), False),
-            StructField("wall_time_s", DoubleType(), False),
-        ]
-    )
 
 
 def _read_manifest(checkpoint_dir: str) -> dict:
@@ -70,12 +60,13 @@ def _read_manifest(checkpoint_dir: str) -> dict:
         return json.load(f)
 
 
-def _publish_manifest(checkpoint_dir: str, manifest: dict) -> None:
-    """Atomic snapshot commit: write tmp, fsync, rename (pointer swap)."""
-    path = os.path.join(checkpoint_dir, MANIFEST)
+def _publish(path: str, text: str) -> None:
+    """Atomic pointer swap: write a uniquely named tmp sibling, fsync it,
+    then rename it over ``path``, so a reader sees the old or the new
+    content, never a torn or empty file."""
     tmp = path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
+        f.write(text)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
@@ -89,86 +80,83 @@ class PipelineResult:
     results: DataFrame  # keys..., the merged sketch column (+ approx_distinct for HLL)
 
 
-def _fold_with_lineage(key_cols: list[str], value_col: str, p: int, out_schema: StructType):
-    """Arrow-native fold (mapInArrow): hash straight from Arrow buffers,
-    group codes from Arrow dictionary encoding — same hot path as
-    functions.sketch.hll_partial_sketches, plus per-group lineage."""
-    import pyarrow as pa
-
-    from ..fold import _arrow_group_codes, _segments
-    from ..functions.sketch import _arrow_idx_rho
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    m = kernel.m_for_p(p)
-    arrow_schema = to_arrow_schema(out_schema)
-    group_cols = ["_split_id"] + key_cols
+def _lineage_partials(subset: DataFrame, key_cols: list[str], value_col: str, family) -> DataFrame:
+    """One row per (input partition, split, key) of ``subset`` (which
+    carries ``_split_id``): ``split_id, keys..., <family.column>,
+    row_count, register_checksum, wall_time_s`` (FIXTURES.md §5).
+    ``row_count`` counts NULL-value rows too and ``register_checksum`` is
+    the sha1 of the serialized partial."""
+    family.empty()  # bad parameters fail here, on the driver
+    schema = StructType(
+        [StructField("split_id", StringType(), False)]
+        + [subset.schema[k] for k in key_cols]
+        + [
+            StructField(family.column, BinaryType(), False),
+            StructField("row_count", LongType(), False),
+            StructField("register_checksum", StringType(), False),
+            StructField("wall_time_s", DoubleType(), False),
+        ]
+    )
+    arrow_schema = to_arrow_schema(schema)
+    group_cols = ["_split_id", *key_cols]
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict = {}  # (split_id, key...) -> [regs, row_count]
         t0 = time.time()
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            varr = rb.column(rb.schema.get_field_index(value_col))
-            idx, rho, valid = _arrow_idx_rho(varr, p)
-            codes_full, uniques_rows = _arrow_group_codes(rb, group_cols)
-            counts_full = np.bincount(codes_full, minlength=len(uniques_rows))
-            for gi, row in enumerate(uniques_rows):
-                if row not in acc:
-                    acc[row] = [np.zeros(m, dtype=np.uint8), 0]
-                acc[row][1] += int(counts_full[gi])
-            codes = codes_full[valid] if valid is not None else codes_full
-            for code, sel in _segments(codes):
-                np.maximum.at(acc[uniques_rows[code]][0], idx[sel], rho[sel])
+        acc = _fold_groups(batches, group_cols, value_col, family)
         if not acc:
             return
         wall = time.time() - t0
-        rows = list(acc.keys())
-        out = {"split_id": [r[0] for r in rows]}
-        for ki, k in enumerate(key_cols):
-            out[k] = [r[ki + 1] for r in rows]
-        out["sketch"] = [codec.serialize(acc[r][0]) for r in rows]
-        out["row_count"] = [acc[r][1] for r in rows]
-        out["register_checksum"] = [
-            hashlib_sha1(acc[r][0].tobytes()) for r in rows
-        ]
-        out["wall_time_s"] = [float(wall)] * len(rows)
+        out = {c: [g[i] for g in acc] for i, c in enumerate(["split_id", *key_cols])}
+        blobs = [family.serialize(state) for state, _ in acc.values()]
+        out[family.column] = blobs
+        out["row_count"] = [rows for _, rows in acc.values()]
+        out["register_checksum"] = [hashlib.sha1(b).hexdigest() for b in blobs]
+        out["wall_time_s"] = [wall] * len(blobs)
         yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
 
-    return fold
+    return subset.select(*group_cols, value_col).mapInArrow(fold, schema=schema)
 
 
-def hashlib_sha1(b: bytes) -> str:
-    import hashlib
-
-    return hashlib.sha1(b).hexdigest()
-
-
-def _pipeline_core(
+def run_summary_pipeline(
     spark: SparkSession,
     input_path: str,
     checkpoint_dir: str,
     *,
     key_cols: list[str],
+    value_col: str,
     family,
-    make_partials,
     fail_after_splits: int | None = None,
+    _salt_partitions: int | None = None,
 ) -> PipelineResult:
-    """The shared resumable-checkpoint loop (both pipeline flavors run
-    through this one commit protocol, so fixes to it apply everywhere):
+    """One (possibly resuming) pipeline run over a parquet directory for
+    ANY sketch family (a ``fold.py`` family object: ``HLLFamily``,
+    ``CMSFamily``, ``BloomFamily``, ``ThetaFamily``, ``MGFamily``,
+    ``ObjectFamily`` for KLL / t-digest). Results: ``key_cols...,
+    family.column``; ``lineage_table`` lists the checkpointed partials.
 
     - split discovery is METADATA-ONLY (file listing, no row scan) and
       resume reads ONLY the missing files — a predicate on
       input_file_name() can't push down, so filtering post-scan would
       re-read every completed split on every resume (fatal at 10^12 rows)
-    - manifest commit is atomic (write-tmp + fsync + rename) and happens
-      AFTER the partials file lands, so a mid-run kill leaves at worst an
-      orphan partials file the manifest never references
-    - ``make_partials(subset_df)`` folds this run's splits (the subset
-      carries a ``_split_id`` column) into ``key_cols..., family.column``
-      rows; ``fold.merge`` then merges every manifest-listed partials file
-      into the results. Key types come from the input's schema, so the
-      results have the same schema before the first commit as after it.
+    - each run folds its splits into per-(split, key) partials with
+      lineage (``_lineage_partials``); the manifest commit is atomic and
+      happens AFTER the partials file lands, so a mid-run kill leaves at
+      worst an orphan partials file the manifest never references
+    - ``fold.merge`` merges every manifest-listed partials file into the
+      results, reading only ``key_cols..., family.column`` (so a
+      checkpoint written without lineage columns still resumes). Re-merging
+      whole partial files is safe because the family's merges are
+      associative/commutative, and counter families are never re-folded
+      thanks to the file-level dedupe. Key types come from the input's
+      schema, so the results have the same schema before the first commit
+      as after it.
+
+    ``fail_after_splits``: test hook — process only the first N remaining
+    splits this run (simulates a mid-scan kill before the final merge).
+    ``_salt_partitions``: repartition the scan by xxhash64(value, split)
+    to break url-host skew before sketching (``run_sketch_pipeline``'s
+    ``salt_partitions``); the split id rides along, so lineage stays
+    per split and the merged results do not change.
     """
     os.makedirs(checkpoint_dir, exist_ok=True)
     manifest = _read_manifest(checkpoint_dir)
@@ -180,22 +168,22 @@ def _pipeline_core(
         todo = todo[:fail_after_splits]
 
     run_id = uuid.uuid4().hex[:12]
-    processed = 0
     if todo:
         subset = spark.read.parquet(*todo).withColumn("_split_id", F.input_file_name())
-        partials = make_partials(subset)
+        if _salt_partitions:
+            subset = subset.repartition(
+                _salt_partitions, F.xxhash64(F.col(value_col), F.col("_split_id"))
+            )
         out_file = os.path.join(checkpoint_dir, f"partials-{run_id}.parquet")
-        partials.write.mode("overwrite").parquet(out_file)
-        processed = len(todo)
+        _lineage_partials(subset, key_cols, value_col, family).write.mode("overwrite").parquet(out_file)
         manifest = _read_manifest(checkpoint_dir)
         manifest["completed_splits"] = sorted(set(manifest["completed_splits"]) | set(todo))
         manifest["partial_files"] = manifest["partial_files"] + [out_file]
         manifest["runs"] = manifest["runs"] + [
             {"run_id": run_id, "splits": len(todo), "ts": time.time()}
         ]
-        _publish_manifest(checkpoint_dir, manifest)
+        _publish(os.path.join(checkpoint_dir, MANIFEST), json.dumps(manifest, indent=1))
 
-    manifest = _read_manifest(checkpoint_dir)
     if manifest["partial_files"]:
         allp = spark.read.parquet(*manifest["partial_files"]).select(*key_cols, family.column)
         results = merge(allp, key_cols, family)
@@ -204,7 +192,7 @@ def _pipeline_core(
         results = spark.createDataFrame([], StructType(fields))
     return PipelineResult(
         run_id=run_id,
-        processed_splits=processed,
+        processed_splits=len(todo),
         skipped_splits=len(done),
         results=results,
     )
@@ -221,74 +209,26 @@ def run_sketch_pipeline(
     salt_partitions: int | None = None,
     fail_after_splits: int | None = None,
 ) -> PipelineResult:
-    """One (possibly resuming) HLL pipeline run over a parquet directory
-    (specialized Arrow fold with per-split lineage rows); the results carry
+    """``run_summary_pipeline`` with ``HLLFamily(p)``; the results carry
     ``approx_distinct`` beside each merged ``sketch``.
 
     ``salt_partitions``: repartition the scan by xxhash64(value, split) to
     break url-host skew before sketching — harmless to results because
-    merge is grouping-independent, but it must stay OFF when lineage
-    matters (salting mixes rows across files, so per-split attribution
-    needs the split column carried through, which we do — the salt only
-    reshuffles rows, split_id rides along).
-    ``fail_after_splits``: test hook — process only the first N remaining
-    splits this run (simulates a mid-scan kill before the final merge).
+    merge is grouping-independent, and the split id rides along, so the
+    lineage rows stay per split.
     """
-
-    def make_partials(subset: DataFrame) -> DataFrame:
-        subset = subset.select("_split_id", *key_cols, value_col)
-        if salt_partitions:
-            subset = subset.repartition(
-                salt_partitions, F.xxhash64(F.col(value_col), F.col("_split_id"))
-            )
-        schema = _partials_schema([subset.schema[k] for k in key_cols])
-        return subset.mapInArrow(_fold_with_lineage(key_cols, value_col, p, schema), schema=schema)
-
-    res = _pipeline_core(
+    res = run_summary_pipeline(
         spark,
         input_path,
         checkpoint_dir,
         key_cols=key_cols,
+        value_col=value_col,
         family=HLLFamily(p),
-        make_partials=make_partials,
         fail_after_splits=fail_after_splits,
+        _salt_partitions=salt_partitions,
     )
     return replace(
         res, results=res.results.withColumn("approx_distinct", hll_count_sketch(F.col("sketch")))
-    )
-
-
-def run_summary_pipeline(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_dir: str,
-    *,
-    key_cols: list[str],
-    value_col: str,
-    family,
-    fail_after_splits: int | None = None,
-) -> PipelineResult:
-    """The resumable checkpoint pipeline for ANY sketch family (a
-    ``fold.py`` family object: ``CMSFamily``, ``BloomFamily``,
-    ``ThetaFamily``, ``MGFamily``, ``ObjectFamily`` for KLL / t-digest, or
-    ``HLLFamily``) — the same shape as the HLL ``run_sketch_pipeline``,
-    which keeps its specialized fold with per-split lineage.
-
-    Each run folds its splits with ``fold.partial_sketches(subset,
-    key_cols, value_col, family)``; resume correctness needs no split
-    column in the partials — the manifest's completed-file set is the
-    unit of work, and re-merging whole partial files is safe because the
-    family's merges are associative/commutative (max/OR families are
-    idempotent too; counter families are never re-folded thanks to the
-    file-level dedupe). Results: ``key_cols..., family.column``."""
-    return _pipeline_core(
-        spark,
-        input_path,
-        checkpoint_dir,
-        key_cols=key_cols,
-        family=family,
-        make_partials=lambda subset: partial_sketches(subset, key_cols, value_col, family),
-        fail_after_splits=fail_after_splits,
     )
 
 

@@ -32,6 +32,7 @@ from .. import kernel
 from ..fold import merge, partial_sketches
 from ..functions.sketch import HLLFamily, _arrow_idx_rho
 from ..kernel import HLL_P_DEFAULT
+from ..plans.pipeline import _publish
 
 
 def foreach_batch_summary_sink(keys: list[str], value_col: str, table_dir: str, family):
@@ -40,7 +41,8 @@ def foreach_batch_summary_sink(keys: list[str], value_col: str, table_dir: str, 
     / Misra–Gries): fold the micro-batch into partial sketches with
     ``fold.partial_sketches``, re-merge them with the previous snapshot
     through ``fold.merge`` (the foreachBatch frame is a batch frame), and
-    swap the parquet snapshot pointer atomically.
+    swap the parquet snapshot pointer atomically (tmp, fsync, rename —
+    the pipeline manifest's commit).
 
     Exactly-once per epoch: the _CURRENT pointer records the last APPLIED
     epoch; a retry of an epoch the pointer already covers is skipped
@@ -77,10 +79,7 @@ def foreach_batch_summary_sink(keys: list[str], value_col: str, table_dir: str, 
             new = new.unionByName(old)
         snap = f"snap-{epoch_id}"
         merge(new, keys, family).write.mode("overwrite").parquet(os.path.join(table_dir, snap))
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{snap} {epoch_id}")
-        os.replace(tmp, pointer)
+        _publish(pointer, f"{snap} {epoch_id}")
 
     return sink
 

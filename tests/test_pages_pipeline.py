@@ -1,5 +1,6 @@
 """Pages generator determinism + resumable checkpoint/lineage pipeline."""
 
+import hashlib
 import os
 
 import numpy as np
@@ -76,6 +77,30 @@ def test_pipeline_full_run_matches_local(spark, pages_path, tmp_path):
     for r in rows:
         local.setdefault(r["lang"], HLL()).add(r["url"])
     assert got == {k: h.count() for k, h in local.items()}
+
+
+# SHA-1 over the sorted "split|lang|sha1(sketch)|row_count" lines of the
+# checkpointed partials of one run_sketch_pipeline over pages_path by
+# lang; a split is its file name up to the write uuid ("part-00003")
+PIPELINE_PARTIALS_SHA1 = "1eb14f79ff2657b233cebcb78eece61d12728bc2"
+
+
+def test_pipeline_partials_pinned(spark, pages_path, tmp_path):
+    ck = str(tmp_path / "ck_pinned")
+    run_sketch_pipeline(spark, pages_path, ck, key_cols=["lang"], value_col="url")
+    lines = [
+        "|".join(
+            (
+                "-".join(os.path.basename(r["split_id"]).split("-")[:2]),
+                str(r["lang"]),
+                hashlib.sha1(bytes(r["sketch"])).hexdigest(),
+                str(r["row_count"]),
+            )
+        )
+        for r in lineage_table(spark, ck).collect()
+    ]
+    assert len(lines) == 8 * 5  # 8 splits x 5 langs
+    assert hashlib.sha1("\n".join(sorted(lines)).encode()).hexdigest() == PIPELINE_PARTIALS_SHA1
 
 
 def test_pipeline_kill_and_resume_without_rehash(spark, pages_path, tmp_path):
@@ -193,6 +218,69 @@ def test_summary_pipeline_kill_resume_theta(spark, tmp_path):
     # 211 distinct > k=128: estimation regime, estimate within 6/sqrt(k-1)
     est = once.results.select(theta_estimate(F.col("theta")).alias("e")).collect()[0]["e"]
     assert abs(est - 211) <= 6 / (127 ** 0.5) * 211
+
+
+@pytest.fixture(scope="module")
+def keyed_events_path(spark, tmp_path_factory):
+    """4000 rows in 8 parquet files: a key with NULLs and a value with NULLs."""
+    path = str(tmp_path_factory.mktemp("keyed") / "src")
+    spark.createDataFrame(
+        [(f"k{i % 3}" if i % 17 else None, None if i % 5 == 0 else f"u{i % 37}") for i in range(4000)],
+        "k string, uid string",
+    ).repartition(8).write.parquet(path)
+    return path
+
+
+def _cms_run(spark, src, ck, fail=None):
+    from phphll_spark.plans import run_summary_pipeline
+    from phphll_spark.sketches import CMSFamily
+
+    return run_summary_pipeline(
+        spark, src, ck, key_cols=["k"], value_col="uid", family=CMSFamily(depth=4, width=256), fail_after_splits=fail
+    )
+
+
+def test_summary_pipeline_cms_lineage_after_kill_and_resume(spark, keyed_events_path, tmp_path):
+    """A CMS checkpoint carries the FIXTURES.md §5 lineage: after a kill and
+    a resume every split is listed, row_count sums to the input rows with
+    NULL-value rows included, and register_checksum is the sha1 of the
+    checkpointed partial."""
+    ck = str(tmp_path / "ck")
+    assert _cms_run(spark, keyed_events_path, ck, fail=3).processed_splits == 3
+    assert _cms_run(spark, keyed_events_path, ck).processed_splits == 5
+    rows = lineage_table(spark, ck).collect()
+    name = lambda path: os.path.basename(path)
+    assert {name(r["split_id"]) for r in rows} == {
+        name(s) for s in spark.read.parquet(keyed_events_path).inputFiles()
+    }
+    assert sum(r["row_count"] for r in rows) == 4000
+    assert all(r["register_checksum"] == hashlib.sha1(bytes(r["cms"])).hexdigest() for r in rows)
+    assert all(r["wall_time_s"] >= 0 for r in rows)
+
+
+def test_summary_pipeline_resumes_a_checkpoint_without_lineage(spark, keyed_events_path, tmp_path):
+    """A checkpoint whose partial files hold only ``keys..., <column>`` (the
+    format written before summary partials carried lineage) still resumes
+    and merges to the sketches of an uninterrupted run."""
+    import json
+
+    from phphll_spark.fold import partial_sketches
+    from phphll_spark.sketches import CMSFamily
+
+    ck = str(tmp_path / "ck_old")
+    os.makedirs(ck)
+    done = sorted(spark.read.parquet(keyed_events_path).inputFiles())[:3]
+    old = os.path.join(ck, "partials-old.parquet")
+    partial_sketches(spark.read.parquet(*done), ["k"], "uid", CMSFamily(depth=4, width=256)).write.parquet(old)
+    assert spark.read.parquet(old).columns == ["k", "cms"]
+    with open(os.path.join(ck, "manifest.json"), "w") as f:
+        json.dump({"completed_splits": done, "partial_files": [old], "runs": [{"run_id": "old", "splits": 3, "ts": 0}]}, f)
+
+    resumed = _cms_run(spark, keyed_events_path, ck)
+    assert (resumed.skipped_splits, resumed.processed_splits) == (3, 5)
+    clean = _cms_run(spark, keyed_events_path, str(tmp_path / "ck_clean"))
+    blobs = lambda res: {r["k"]: bytes(r["cms"]) for r in res.results.collect()}
+    assert blobs(resumed) == blobs(clean) and len(blobs(clean)) == 4
 
 
 @pytest.fixture(scope="module")

@@ -58,12 +58,6 @@ def test_partitioning_invariance(spark, pages):
     for reshaped in (pages.repartition(1), pages.repartition(17, "url"), pages.coalesce(2)):
         got = {r["lang"]: r["approx_distinct"] for r in hll_count_distinct(reshaped, ["lang"], "url").collect()}
         assert got == base
-    # pre_repartition path (high-cardinality-keys mode)
-    got = {
-        r["lang"]: r["approx_distinct"]
-        for r in hll_count_distinct(pages, ["lang"], "url", pre_repartition=5).collect()
-    }
-    assert got == base
 
 
 def test_global_distinct(spark, pages):

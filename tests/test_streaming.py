@@ -58,6 +58,24 @@ def test_foreach_batch_sketch_sink(spark, stream_dir, tmp_path):
     assert got == {"en": en.count(), "de": de.count()}
 
 
+def test_sink_pointer_is_fsynced_before_the_swap(spark, tmp_path, monkeypatch):
+    """One sink epoch publishes _CURRENT through a uniquely named tmp file
+    that is fsynced before the rename, so a crash cannot leave a torn or
+    empty pointer that every later epoch would fail to parse."""
+    table = str(tmp_path / "t")
+    sink = foreach_batch_sketch_sink(["lang"], "url", table)
+    batch = spark.createDataFrame([("en", "u1"), ("de", "u2")], "lang string, url string")
+    fsyncs = []
+    real_fsync = os.fsync
+    monkeypatch.setattr(os, "fsync", lambda fd: (fsyncs.append(fd), real_fsync(fd))[1])
+    sink(batch, 0)
+    monkeypatch.undo()
+    assert len(fsyncs) == 1
+    with open(os.path.join(table, "_CURRENT")) as f:
+        assert f.read() == "snap-0 0"
+    assert sorted(os.listdir(table)) == ["_CURRENT", "snap-0"]
+
+
 def test_stateful_sketch_counts(spark, stream_dir, tmp_path):
     stream = (
         spark.readStream.schema("lang string, url string")
