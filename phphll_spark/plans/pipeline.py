@@ -16,7 +16,7 @@ designed for kill/resume at 10^12-row scale:
 - **Resume** = anti-join source splits against the manifest's completed
   set; only missing splits are re-scanned. Correct because merge is
   associative/commutative/idempotent (hyperloglog.c:1038-1077).
-- Lineage rows carry (split_id, row_count, register_checksum, wall_time_s)
+- Lineage rows carry (run_id, split_id, row_count, register_checksum, wall_time_s)
   per FIXTURES.md §5 for audit/metrics, for every sketch family: the
   partials come out of the same fold loop as ``fold.partial_sketches``
   (``fold._fold_groups``), grouped by split as well as by key.
@@ -80,15 +80,18 @@ class PipelineResult:
     results: DataFrame  # keys..., the merged sketch column (+ approx_distinct for HLL)
 
 
-def _lineage_partials(subset: DataFrame, key_cols: list[str], value_col: str, family) -> DataFrame:
+def _lineage_partials(
+    subset: DataFrame, key_cols: list[str], value_col: str, family, run_id: str
+) -> DataFrame:
     """One row per (input partition, split, key) of ``subset`` (which
-    carries ``_split_id``): ``split_id, keys..., <family.column>,
+    carries ``_split_id``): ``run_id, split_id, keys..., <family.column>,
     row_count, register_checksum, wall_time_s`` (FIXTURES.md §5).
-    ``row_count`` counts NULL-value rows too and ``register_checksum`` is
-    the sha1 of the serialized partial."""
+    ``run_id`` names the run that folded the split, ``row_count`` counts
+    NULL-value rows too and ``register_checksum`` is the sha1 of the
+    serialized partial."""
     family.empty()  # bad parameters fail here, on the driver
     schema = StructType(
-        [StructField("split_id", StringType(), False)]
+        [StructField("run_id", StringType(), False), StructField("split_id", StringType(), False)]
         + [subset.schema[k] for k in key_cols]
         + [
             StructField(family.column, BinaryType(), False),
@@ -106,7 +109,8 @@ def _lineage_partials(subset: DataFrame, key_cols: list[str], value_col: str, fa
         if not acc:
             return
         wall = time.time() - t0
-        out = {c: [g[i] for g in acc] for i, c in enumerate(["split_id", *key_cols])}
+        out = {"run_id": [run_id] * len(acc)}
+        out.update({c: [g[i] for g in acc] for i, c in enumerate(["split_id", *key_cols])})
         blobs = [family.serialize(state) for state, _ in acc.values()]
         out[family.column] = blobs
         out["row_count"] = [rows for _, rows in acc.values()]
@@ -175,7 +179,7 @@ def run_summary_pipeline(
                 _salt_partitions, F.xxhash64(F.col(value_col), F.col("_split_id"))
             )
         out_file = os.path.join(checkpoint_dir, f"partials-{run_id}.parquet")
-        _lineage_partials(subset, key_cols, value_col, family).write.mode("overwrite").parquet(out_file)
+        _lineage_partials(subset, key_cols, value_col, family, run_id).write.mode("overwrite").parquet(out_file)
         manifest = _read_manifest(checkpoint_dir)
         manifest["completed_splits"] = sorted(set(manifest["completed_splits"]) | set(todo))
         manifest["partial_files"] = manifest["partial_files"] + [out_file]
@@ -233,8 +237,10 @@ def run_sketch_pipeline(
 
 
 def lineage_table(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """All checkpointed lineage rows (FIXTURES.md §5 audit view)."""
+    """All checkpointed lineage rows (FIXTURES.md §5 audit view). The
+    partials files' schemas are merged, so a file written before a lineage
+    column existed (e.g. ``run_id``) shows it as NULL."""
     manifest = _read_manifest(checkpoint_dir)
     if not manifest["partial_files"]:
         raise FileNotFoundError("no checkpointed partials")
-    return spark.read.parquet(*manifest["partial_files"])
+    return spark.read.option("mergeSchema", "true").parquet(*manifest["partial_files"])

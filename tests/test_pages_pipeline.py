@@ -258,6 +258,24 @@ def test_summary_pipeline_cms_lineage_after_kill_and_resume(spark, keyed_events_
     assert all(r["wall_time_s"] >= 0 for r in rows)
 
 
+def test_lineage_rows_carry_the_run_that_folded_their_split(spark, keyed_events_path, tmp_path):
+    """After a kill and a resume the lineage rows name exactly the
+    manifest's two runs: the first 3 splits (sorted) by the killed run and
+    the other 5 by the resuming one."""
+    import json
+
+    ck = str(tmp_path / "ck")
+    first = _cms_run(spark, keyed_events_path, ck, fail=3)
+    second = _cms_run(spark, keyed_events_path, ck)
+    with open(os.path.join(ck, "manifest.json")) as f:
+        assert [r["run_id"] for r in json.load(f)["runs"]] == [first.run_id, second.run_id]
+    name = lambda path: os.path.basename(path)
+    splits = sorted(spark.read.parquet(keyed_events_path).inputFiles())
+    want = {name(s): first.run_id if i < 3 else second.run_id for i, s in enumerate(splits)}
+    got = {(name(r["split_id"]), r["run_id"]) for r in lineage_table(spark, ck).collect()}
+    assert got == set(want.items())
+
+
 def test_summary_pipeline_resumes_a_checkpoint_without_lineage(spark, keyed_events_path, tmp_path):
     """A checkpoint whose partial files hold only ``keys..., <column>`` (the
     format written before summary partials carried lineage) still resumes
@@ -270,7 +288,9 @@ def test_summary_pipeline_resumes_a_checkpoint_without_lineage(spark, keyed_even
     ck = str(tmp_path / "ck_old")
     os.makedirs(ck)
     done = sorted(spark.read.parquet(keyed_events_path).inputFiles())[:3]
-    old = os.path.join(ck, "partials-old.parquet")
+    # sorts before every run's partials-<hex>.parquet, so a read that took
+    # the first file's schema would hide the later files' lineage columns
+    old = os.path.join(ck, "partials-0.parquet")
     partial_sketches(spark.read.parquet(*done), ["k"], "uid", CMSFamily(depth=4, width=256)).write.parquet(old)
     assert spark.read.parquet(old).columns == ["k", "cms"]
     with open(os.path.join(ck, "manifest.json"), "w") as f:
@@ -281,6 +301,8 @@ def test_summary_pipeline_resumes_a_checkpoint_without_lineage(spark, keyed_even
     clean = _cms_run(spark, keyed_events_path, str(tmp_path / "ck_clean"))
     blobs = lambda res: {r["k"]: bytes(r["cms"]) for r in res.results.collect()}
     assert blobs(resumed) == blobs(clean) and len(blobs(clean)) == 4
+    # lineage_table merges the files' schemas: the old file's rows have no run
+    assert {r["run_id"] for r in lineage_table(spark, ck).collect()} == {None, resumed.run_id}
 
 
 @pytest.fixture(scope="module")

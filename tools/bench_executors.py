@@ -29,6 +29,8 @@ each level; see CLAUDE.md). The r4 urls history lives in
 BENCH_executors.json and is left untouched.
 
 Usage: python tools/bench_executors.py [n_rows] [urls|texts]
+It reads the 64-file pages table that `python tools/submit_scaling.py n_rows`
+writes under .bench_cache/.
 """
 
 from __future__ import annotations
@@ -42,7 +44,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 32_000_000
 JOB = sys.argv[2] if len(sys.argv) > 2 else "urls"
-assert JOB in ("urls", "texts"), JOB
+if JOB not in ("urls", "texts"):
+    sys.exit("usage: python tools/bench_executors.py [n_rows] [urls|texts]")
 REPS = 2
 
 # Each executor subprocess: local[2] pinned to 2 cores, folds its file
@@ -90,37 +93,43 @@ def run_executor(pin: str, files: list[str]) -> subprocess.Popen:
     )
 
 
+def result(p: subprocess.Popen) -> dict:
+    out = p.stdout.read()
+    if p.wait() != 0:
+        raise RuntimeError(f"executor pinned to CPUs {p.args[2]} exited with status {p.returncode}")
+    return json.loads(out.splitlines()[-1])
+
+
 def main() -> None:
     sys.path.insert(0, REPO)
     from phphll_spark.hll import HLL
 
-    cache = os.path.join(REPO, ".bench_cache", f"pages_{N_ROWS}")
+    cache = os.path.join(REPO, ".bench_cache", f"pages_{N_ROWS}_64files")
+    if not os.path.exists(os.path.join(cache, "_SUCCESS")):
+        sys.exit(f"{cache} is missing; `python tools/submit_scaling.py {N_ROWS}` writes it")
     files = sorted(
         os.path.join(cache, f) for f in os.listdir(cache) if f.endswith(".parquet")
     )
-    assert len(files) % 4 == 0, f"need a multiple of 4 files, got {len(files)}"
+    if len(files) % 4:
+        raise ValueError(f"need a multiple of 4 files, got {len(files)}")
     loadavg = os.getloadavg()[0]
 
     # level 1: ONE executor (2 cores) over all files
-    p = run_executor("0-1", files)
-    single = json.loads(p.stdout.read().splitlines()[-1])
-    assert p.wait() == 0
+    single = result(run_executor("0-1", files))
 
     # level 2: FOUR executors (2 cores each, disjoint pins) over 4 slices,
     # launched concurrently; level wall = max over executors + local merge
     slices = [files[i::4] for i in range(4)]
     procs = [run_executor(f"{2*i}-{2*i+1}", slices[i]) for i in range(4)]
-    outs = []
-    for p in procs:
-        outs.append(json.loads(p.stdout.read().splitlines()[-1]))
-        assert p.wait() == 0
+    outs = [result(p) for p in procs]
     t0 = time.time()
     merged = HLL(bytes.fromhex(outs[0]["blob"]))
     merged.merge(*[bytes.fromhex(o["blob"]) for o in outs[1:]])
     est4 = merged.count()
     merge_sec = time.time() - t0
     est1 = HLL(bytes.fromhex(single["blob"])).count()
-    assert est1 == est4, (est1, est4)  # partition-grouping independence
+    if est1 != est4:  # partition-grouping independence
+        raise RuntimeError(f"one executor estimated {est1}, four merged estimated {est4}")
 
     wall1 = single["wall"]
     wall4 = max(o["wall"] for o in outs) + merge_sec
@@ -148,7 +157,8 @@ def main() -> None:
             "sessions": [],
         }
     )
-    assert rec["rows"] == N_ROWS, "mixing row counts in one record"
+    if rec["rows"] != N_ROWS:
+        raise ValueError(f"{path} holds {rec['rows']}-row sessions, this one has {N_ROWS} rows")
     rec["sessions"].append(session)
     best1 = min(s["single_2core_wall"] for s in rec["sessions"])
     best4 = min(max(s["four_exec_walls"]) + s.get("merge_sec", 0) for s in rec["sessions"])

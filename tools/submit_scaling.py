@@ -28,7 +28,10 @@ SPARK_SUBMIT = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-sub
 
 
 def ensure_cache(n_rows: int) -> str:
-    cache = os.path.join(REPO, ".bench_cache", f"pages_{n_rows}")
+    """The pages table at ``n_rows`` in 64 files (tools/bench_executors.py
+    reads it too); the name carries the file count because the
+    ``maxPartitionBytes`` below assumes ~150 MB files."""
+    cache = os.path.join(REPO, ".bench_cache", f"pages_{n_rows}_64files")
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
         gen = (
             "import sys; sys.path.insert(0, {repo!r})\n"
